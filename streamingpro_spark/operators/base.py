@@ -8,6 +8,8 @@ Reference interface: streaming/dsl/mmlib/SQLAlg.scala:27-64 —
 
 from __future__ import annotations
 
+import itertools
+
 from typing import TYPE_CHECKING, Any
 
 if TYPE_CHECKING:
@@ -63,6 +65,19 @@ def get_float(params: dict[str, str], key: str, default: float) -> float:
     return float(params.get(key, default))
 
 
+def refuse_scratch_collisions(df: "DataFrame", et_name: str,
+                              scratch: dict[str, str]) -> None:
+    """Refuse input columns named like a scratch column this run creates
+    (`scratch`: name → why) — it would be overwritten, then dropped."""
+    clash = sorted(set(scratch) & set(df.columns))
+    if clash:
+        why = "; ".join(f"{c}: {scratch[c]}" for c in clash)
+        raise ValueError(
+            f"{et_name}: input column(s) {clash} collide with scratch "
+            f"columns this run creates ({why}) — rename them before "
+            f"running {et_name}")
+
+
 def ensure_parallelism(df: "DataFrame", min_partitions: int | None = None) -> "DataFrame":
     """Spread a narrow input across the cluster before compute-heavy
     per-row work.  Small single-file inputs arrive as 1 partition and
@@ -99,18 +114,22 @@ def pushdown_barrier(df: "DataFrame", tag: str) -> "DataFrame":
     CollectMetrics (`df.observe`) is the cheapest row-preserving plan
     node the optimizer must not move a filter across (observed row
     counts would change): one count accumulator per task, no exchange,
-    no Python, and column pruning still passes through it.  The name
-    is uniqued per call; identical subtrees may still appear twice in
-    one query (e.g. a dedup self-union) — verified legal."""
-    import uuid
+    no Python, and column pruning still passes through it.  Names are
+    `__barrier_<tag>_<n>`, n from a process-wide counter: unique per
+    call, yet plan text is reproducible across runs.  Identical
+    subtrees may still appear twice in one query (e.g. a dedup
+    self-union) — verified legal."""
     from pyspark.sql import functions as F
     if df.isStreaming:
         # observe() is legal on streams, but streaming queries in this
         # engine never compose a pushable filter over ET metrics, and
         # per-batch metric bookkeeping is pure overhead — pass through
         return df
-    return df.observe(f"__barrier_{tag}_{uuid.uuid4().hex[:8]}",
+    return df.observe(f"__barrier_{tag}_{next(_BARRIER_IDS)}",
                       F.count(F.lit(1)).alias("rows"))
+
+
+_BARRIER_IDS = itertools.count()
 
 
 def flatten_unions(df: "DataFrame") -> "DataFrame":

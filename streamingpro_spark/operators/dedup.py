@@ -201,6 +201,87 @@ def minhash_band_rows(src, id_col: str, col: str, k: int, bands: int,
     return sig.select(F.col("__id"), F.inline(band_struct))
 
 
+def lsh_candidate_pairs(rows: "DataFrame", max_bucket: int,
+                        ref_rows: "DataFrame | None" = None,
+                        intra: bool = False,
+                        payload: "str | None" = None) -> "DataFrame":
+    """LSH bucket rows `(__id, __band, __bh)` → distinct candidate pairs,
+    the one bucket→pair step of the near-dup family.  Without
+    `ref_rows`: self pairs (doc_a, doc_b), doc_a < doc_b.  With them:
+    cross pairs (doc_a from `rows`, doc_b from `ref_rows`; the same id
+    may sit on both sides), plus, with `intra`, the self pairs of
+    `rows`, tagged pair_src = ref|self.  NULL ids count toward a
+    bucket's size but never pair.  `payload` names a small per-row
+    column carried into the pairs as (__pa, __pb), so a caller can
+    verify a pair without joining back by id — a filter on them runs
+    before the final distinct.
+
+    ONE shuffle on (band, bh): a window-count skew guard first (the
+    WindowExec buffer spills, so a mega-bucket is dropped before any
+    non-spillable collect_list buffer builds), then a groupBy reusing
+    that partitioning collects each bucket's sorted ids.  An input side
+    over `max_bucket` drops the bucket; a ref side over it drops only
+    the ref rows, so intra self pairs survive as self mode finds them.
+    Cross and self pairs come out of ONE expansion — a Union of
+    per-kind expansions re-runs the guard and the aggregate per branch.
+    The expansion streams: one row per (bucket, input id) carrying the
+    bucket's O(cap) id arrays, then one row per pair — never a bucket's
+    O(cap²) pair array in one row, which would neither spill nor fit
+    Spark's array limit at the EmbeddingDedup / ImageDedup caps.
+    MinHashDedup at sf0.1: bucket self-join + cache 6.2s, in-row 4.4s;
+    streamed level with in-row (3.0s vs 2.95s, 4 cores, median of 6)."""
+    from pyspark.sql import Window
+    w = Window.partitionBy("__band", "__bh")
+    # collect_list skips NULLs: a NULL id counts in the guard, never pairs
+    elem = (F.col("__id") if payload is None else
+            F.when(F.col("__id").isNotNull(), F.struct("__id", payload)))
+    if ref_rows is None:
+        kept = (rows.withColumn("__na", F.count(F.lit(1)).over(w))
+                    .filter(F.col("__na") <= max_bucket))
+        aggs = [F.sort_array(F.collect_list(elem)).alias("__a")]
+    else:
+        is_a = F.col("__side") == 0
+        kept = (rows.withColumn("__side", F.lit(0))
+                .unionByName(ref_rows.withColumn("__side", F.lit(1)))
+                .withColumn("__na", F.count(F.when(is_a, 1)).over(w))
+                .withColumn("__nb", F.count(F.when(~is_a, 1)).over(w))
+                .filter((F.col("__na") <= max_bucket)
+                        & (is_a | (F.col("__nb") <= max_bucket))))
+        aggs = [F.sort_array(F.collect_list(F.when(is_a, elem)))
+                .alias("__a"),
+                F.collect_list(F.when(~is_a, elem)).alias("__b")]
+    per_id = (kept.groupBy("__band", "__bh").agg(*aggs)
+              .select("*", F.posexplode("__a").alias("__i", "__x")))
+    a, i = F.col("__a"), F.col("__i")
+    later = F.slice(a, i + 2, F.size(a) - i - 1)     # slice is 1-based
+    if ref_rows is None:
+        pairs = per_id.select("__x", F.explode(later).alias("__y"))
+    elif not intra:
+        pairs = per_id.select("__x", F.explode("__b").alias("__y"))
+    else:
+        def tagged(arr, src):
+            return F.transform(arr, lambda y: F.struct(
+                y.alias("__y"), F.lit(src).alias("pair_src")))
+        pairs = per_id.select("__x", F.inline(F.concat(
+            tagged(F.col("__b"), "ref"), tagged(later, "self"))))
+    x, y = ("__x", "__y") if payload is None else ("__x.__id", "__y.__id")
+    out = [F.col(x).alias("doc_a"), F.col(y).alias("doc_b")]
+    if payload is not None:
+        out += [F.col(f"__x.{payload}").alias("__pa"),
+                F.col(f"__y.{payload}").alias("__pb")]
+    if ref_rows is not None and intra:
+        out.append("pair_src")
+    pairs = pairs.select(*out)
+    # a doc_id on several input rows sits in its bucket twice — never
+    # pair it with itself; a cross pair may carry one id on both sides
+    distinct_ids = F.col("doc_a") != F.col("doc_b")
+    if ref_rows is None:
+        pairs = pairs.filter(distinct_ids)
+    elif intra:
+        pairs = pairs.filter((F.col("pair_src") == "ref") | distinct_ids)
+    return pairs.distinct()
+
+
 # ---------------------------------------------------------------------------
 # ETs
 # ---------------------------------------------------------------------------
@@ -391,7 +472,10 @@ class BloomFilterDedup(ETAlgorithm):
                 ("fpp", "target false-positive rate", "0.01"),
                 ("numHashes", "override k (default from m/n)", "-"),
                 ("maxBits", "fail-fast cap on the bitmap size",
-                 str(1 << 35))]
+                 str(1 << 35)),
+                ("eagerCache", "filter mode materializes its output when "
+                 "the operator is defined (the join runs then); \"false\" "
+                 "keeps the lazy plan", "true")]
 
 
 @register_et("MinHashDedup")
@@ -409,17 +493,10 @@ class MinHashDedup(ETAlgorithm):
     never joins itself; doc_a is always the input's id, doc_b the
     ref's.  Signatures/bands/skew guard are identical on both sides.
 
-    Bucketing shape (round 6): ONE shuffle on (band, bandHash) — a
-    spillable window-count skew guard (drops `maxBucketSize`-violating
-    mega-buckets WITHOUT materializing them; WindowExec buffers spill,
-    collect_list buffers don't), then a groupBy over the same keys
-    (exchange reused, no second shuffle) collecting each bounded
-    bucket's ids, with pairs expanded IN-ROW by array transforms.
-    This replaced the bucket self-join + cache barrier: same shuffle
-    volume but no join stage and no materialization — measured 6.2s →
-    4.4s end-to-end at sf0.1 with identical pair sets.  A higher-
-    order-function signature (array_min over transform, zero shuffles)
-    was prototyped and REJECTED: interpreted per-element md5 ran 10×
+    Bucketing: `lsh_candidate_pairs` (one (band, hash) shuffle, a
+    spillable skew guard, streamed pair expansion).  A higher-order-
+    function signature (array_min over transform, zero shuffles) was
+    prototyped and REJECTED: interpreted per-element md5 ran 10×
     slower than the codegen explode+groupBy signature; the shuffle is
     not the cost, the hash is.
     """
@@ -433,7 +510,6 @@ class MinHashDedup(ETAlgorithm):
         threshold = get_float(params, "threshold", 0.8)
         max_bucket = get_int(params, "maxBucketSize", 1000)
         impl = hash_impl(params)
-        r = k // bands
         ref_name = params.get("refTable", "")
         ref_df = (ensure_parallelism(df.sparkSession.table(ref_name))
                   if ref_name else None)
@@ -490,110 +566,11 @@ class MinHashDedup(ETAlgorithm):
                              F.col("band").alias("__band"),
                              F.col("band_hash").alias("__bh"))
 
-        from pyspark.sql import Window
-
-        def guarded(rows):
-            # skew guard BEFORE collect_list, as a window count: the
-            # WindowExec buffer spills to disk, so a pathological
-            # mega-bucket (millions of boilerplate docs on one band
-            # hash) is dropped without ever materializing in memory —
-            # a size filter AFTER collect_list would have to build the
-            # whole array in one non-spillable agg buffer first.  The
-            # groupBy reuses the window's (band, bh) partitioning, so
-            # this costs a sort, not a second shuffle (measured
-            # slightly FASTER than the post-agg filter at sf0.1).
-            w = Window.partitionBy("__band", "__bh")
-            return (rows.withColumn("__n", F.count(F.lit(1)).over(w))
-                        .filter(F.col("__n") <= max_bucket).drop("__n"))
-
-        if ref_df is None:
-            # bucket ids sorted → positional i<j expansion gives
-            # doc_a < doc_b, exactly the old self-join's a.id < b.id
-            grouped = (guarded(band_rows(df))
-                       .groupBy("__band", "__bh")
-                       .agg(F.sort_array(F.collect_list("__id"))
-                            .alias("__ids"))
-                       .filter(F.size("__ids") >= 2))
-            pairs = (grouped.select(F.explode(F.flatten(F.transform(
-                        F.col("__ids"), lambda x, i: F.transform(
-                            F.slice(F.col("__ids"), i + F.lit(2),
-                                    F.size("__ids") - i - 1),
-                            lambda y: F.struct(x.alias("doc_a"),
-                                               y.alias("doc_b"))))))
-                        .alias("__p"))
-                     # a doc_id appearing on several input rows lands in
-                     # the bucket twice — positional i<j would emit the
-                     # (id, id) self-pair the old strict a.id < b.id
-                     # join never produced
-                     .filter(F.col("__p.doc_a") != F.col("__p.doc_b"))
-                     .select("__p.doc_a", "__p.doc_b").distinct())
-        else:
-            # both sides land in the SAME shuffle (side-tagged union);
-            # the spillable per-(band,bh,side) window guard mirrors the
-            # self-mode shape — mega-buckets are dropped before any
-            # collect_list buffer builds
-            ref_rows = (ref_band_rows() if ref_bands_name
-                        else band_rows(ref_df))
-            tagged = (band_rows(df).withColumn("__side", F.lit(0))
-                      .unionByName(ref_rows
-                                   .withColumn("__side", F.lit(1))))
-            guard_w = Window.partitionBy("__band", "__bh")
-            # one window over the SAME keys the groupBy uses (exchange
-            # reused).  Per-side caps: an input side over the cap drops
-            # the whole bucket (matching self mode); a REF side over
-            # the cap drops only the ref rows — the input rows stay so
-            # intra-batch SELF pairs still form, exactly what self-mode
-            # dedup over the same batch would have found (without this,
-            # skewed lake-side boilerplate would silently degrade the
-            # increment's intra recall).  In non-intra mode the kept
-            # input rows produce no pairs anyway (size(__b)=0 buckets
-            # are filtered before expansion), so outcomes match the old
-            # per-side guards there too.
-            tagged = (tagged
-                      .withColumn("__na", F.count(F.when(
-                          F.col("__side") == 0, 1)).over(guard_w))
-                      .withColumn("__nb", F.count(F.when(
-                          F.col("__side") == 1, 1)).over(guard_w))
-                      .filter((F.col("__na") <= max_bucket)
-                              & ((F.col("__side") == 0)
-                                 | (F.col("__nb") <= max_bucket)))
-                      .drop("__na", "__nb"))
-            grouped = (tagged.groupBy("__band", "__bh")
-                       .agg(F.sort_array(F.collect_list(
-                                F.when(F.col("__side") == 0, F.col("__id"))))
-                            .alias("__a"),
-                            F.collect_list(
-                                F.when(F.col("__side") == 1, F.col("__id")))
-                            .alias("__b")))
-            cross = (grouped
-                     .filter((F.size("__a") >= 1) & (F.size("__b") >= 1))
-                     .select(F.explode(F.flatten(F.transform(
-                        F.col("__a"), lambda x: F.transform(
-                            F.col("__b"),
-                            lambda y: F.struct(x.alias("doc_a"),
-                                               y.alias("doc_b"))))))
-                        .alias("__p"))
-                     .select("__p.doc_a", "__p.doc_b",
-                             F.lit("ref").alias("pair_src")))
-            if intra:
-                # input×input candidates from the SAME grouped buckets —
-                # no extra shuffle, no re-hash: both candidate sets
-                # share the one (band, hash) exchange.  Same sorted
-                # i<j expansion as self mode (doc_a < doc_b).
-                selfp = (grouped.filter(F.size("__a") >= 2)
-                         .select(F.explode(F.flatten(F.transform(
-                            F.col("__a"), lambda x, i: F.transform(
-                                F.slice(F.col("__a"), i + F.lit(2),
-                                        F.size("__a") - i - 1),
-                                lambda y: F.struct(x.alias("doc_a"),
-                                                   y.alias("doc_b"))))))
-                            .alias("__p"))
-                         .filter(F.col("__p.doc_a") != F.col("__p.doc_b"))
-                         .select("__p.doc_a", "__p.doc_b",
-                                 F.lit("self").alias("pair_src")))
-                pairs = cross.unionByName(selfp).distinct()
-            else:
-                pairs = cross.drop("pair_src").distinct()
+        ref_rows = (None if ref_df is None
+                    else ref_band_rows() if ref_bands_name
+                    else band_rows(ref_df))
+        pairs = lsh_candidate_pairs(band_rows(df), max_bucket, ref_rows,
+                                    intra)
 
         # shingle arrays for the verify stage: recomputed from text (cheap —
         # split/slice, no md5) instead of caching big arrays
@@ -602,6 +579,7 @@ class MinHashDedup(ETAlgorithm):
                               shingles_col(F.col(col), n).alias("__sh"))
 
         sh_a = shingle_side(df)
+        out_cols = ["doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard")]
         if intra:
             # doc_b's text lives in the INPUT for self pairs and in the
             # REF for cross pairs — key the shingle lookup by
@@ -612,14 +590,10 @@ class MinHashDedup(ETAlgorithm):
                     .unionByName(shingle_side(ref_df)
                                  .withColumn("pair_src", F.lit("ref"))))
             b_keys = ["doc_b", "pair_src"]
-            out_cols = ["doc_a", "doc_b",
-                        F.round("jaccard", 4).alias("jaccard"),
-                        "pair_src"]
+            out_cols.append("pair_src")
         else:
             sh_b = shingle_side(ref_df if ref_df is not None else df)
             b_keys = ["doc_b"]
-            out_cols = ["doc_a", "doc_b",
-                        F.round("jaccard", 4).alias("jaccard")]
         verified = (pairs
                     .join(sh_a.select(F.col("__id").alias("doc_a"),
                                       F.col("__sh").alias("__sha")), "doc_a")
@@ -638,8 +612,6 @@ class MinHashDedup(ETAlgorithm):
                     # jaccard rows, which is the honest answer)
                     .distinct())
         # `run` is an action: materialize the (small) pair output now
-        # (single-pass plan — no bucket cache to free since the
-        # collect_list bucketing, round 6)
         return eager_materialize(verified, params, context)
 
     def explain_params(self):
@@ -661,7 +633,7 @@ class MinHashDedup(ETAlgorithm):
                  "maxBucketSize drops only the cross pairs — self "
                  "pairs survive, as self-mode dedup would find them",
                  "false"),
-                ("eagerCache", "materialize output, free bucket cache", "true"),
+                ("eagerCache", "materialize the pair output", "true"),
                 ("hashImpl", "md5 (oracle) | xxhash64 (production)", "md5")]
 
 
@@ -767,26 +739,6 @@ def _init_simhash_udf():
 
         _simhash_fold_udf = F.pandas_udf(_simhash_fold, "long")
     return _simhash_fold_udf
-
-
-def simhash_col(text: Column, bits: int = 60) -> Column:
-    """Per-row SimHash: for each bit b, majority vote of token-hash bit b
-    (+1/-1 weights); assemble sign bits into a bigint.
-
-    Pure array expressions — distinct tokens hashed once with
-    portable_hash64, then one aggregate() fold per bit.  At 100 TB this is
-    embarrassingly parallel (no shuffle)."""
-    toks = F.array_distinct(tokens_col(text))
-    hashes = F.transform(toks, lambda t: portable_hash64(t, "simhash"))
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        # vote_b = sum over tokens of (bit set ? 1 : -1)
-        vote = F.aggregate(
-            hashes, F.lit(0).cast("long"),
-            lambda acc, h: acc + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                                        F.lit(1)).otherwise(F.lit(-1)))
-        out = out + F.when(vote > 0, F.lit(2 ** b).cast("long")).otherwise(F.lit(0))
-    return out
 
 
 @register_et("NgramJaccardDedup")
@@ -917,7 +869,6 @@ class EmbeddingDedup(ETAlgorithm):
             return base.mapInPandas(block_pairs, out_schema)
         # corpus exceeds the broadcast bound: SRP-LSH banded candidates +
         # exact verify (the MinHashDedup shape, cosine-space)
-        import numpy as np
         from streamingpro_spark.operators.similarity import (
             derive_srp_banding, make_srp_udf, normalized_col, pair_dot_udf)
         bits, n_tables = derive_srp_banding(
@@ -938,29 +889,13 @@ class EmbeddingDedup(ETAlgorithm):
             v.select("__id", "__n", srp_udf(F.col("__n")).alias("__sigs")),
             context, "embdedup_sig")
 
-        from pyspark.sql import Window
-        # same one-shuffle skew guard as MinHashDedup: the window count
-        # over (table, sig) also establishes the join partitioning
-        guard_w = Window.partitionBy("__t", "__sig")
-        buckets = (with_sig.select("__id", F.posexplode("__sigs"))
-                   .withColumnRenamed("pos", "__t")
-                   .withColumnRenamed("col", "__sig")
-                   .withColumn("__cnt", F.count(F.lit(1)).over(guard_w))
-                   .filter(F.col("__cnt") <= max_bucket).drop("__cnt"))
-        pairs = (buckets.alias("a")
-                 .join(buckets.alias("b"),
-                       (F.col("a.__t") == F.col("b.__t"))
-                       & (F.col("a.__sig") == F.col("b.__sig"))
-                       & (F.col("a.__id") < F.col("b.__id")))
-                 .select(F.col("a.__id").alias("id_a"),
-                         F.col("b.__id").alias("id_b"))
-                 .distinct())
-        out = (pairs
-               .join(with_sig.select(F.col("__id").alias("id_a"),
-                                     F.col("__n").alias("__na")), "id_a")
-               .join(with_sig.select(F.col("__id").alias("id_b"),
-                                     F.col("__n").alias("__nb")), "id_b")
-               .select("id_a", "id_b",
+        vecs = with_sig.select("__id", "__n")
+        out = (lsh_candidate_pairs(with_sig.select("__id", F.posexplode(
+                   "__sigs").alias("__band", "__bh")), max_bucket)
+               .join(vecs.toDF("doc_a", "__na"), "doc_a")
+               .join(vecs.toDF("doc_b", "__nb"), "doc_b")
+               .select(F.col("doc_a").alias("id_a"),
+                       F.col("doc_b").alias("id_b"),
                        pair_dot_udf()(F.col("__na"), F.col("__nb"))
                         .alias("cosine"))
                .filter(F.col("cosine") >= threshold))
@@ -982,24 +917,6 @@ class EmbeddingDedup(ETAlgorithm):
                 ("seed", "LSH path: hyperplane seed", "42"),
                 ("eagerCache", "LSH path: materialize output, free caches",
                  "true")]
-
-
-def _cluster_self_pairs(df, params, context):
-    """Shared NearDedup/SoftDedup step: MinHash verified pairs over df
-    itself → DupClusters labels.  Returns (clustered, cleanup) where
-    cleanup(spark) drops the uuid pairs view once the caller has
-    materialized away from the lazy plan over it."""
-    import uuid as _uuid
-    pairs = MinHashDedup().train(df, "", params, context)
-    view = f"__near_dedup_pairs_{_uuid.uuid4().hex[:8]}"
-    pairs.createOrReplaceTempView(view)
-    clustered = DupClusters().train(
-        df, "", {**params, "pairsTable": view}, context)
-
-    def cleanup(spark):
-        spark.catalog.dropTempView(view)
-
-    return clustered, cleanup
 
 
 @register_et("NearDedup")
@@ -1029,9 +946,7 @@ class NearDedup(ETAlgorithm):
     propagation, both audited in SCALE.md."""
 
     def train(self, df, path, params, context=None):
-        import uuid as _uuid
         id_col = params.get("idCol", "doc_id")
-        spark = df.sparkSession
         if params.get("refTable"):
             # incremental: ONE signature pass + ONE bucket shuffle
             # yields both candidate sets (pair_src self|ref).  The pair
@@ -1055,46 +970,32 @@ class NearDedup(ETAlgorithm):
                 pairs = script_cache(pairs, context,
                                      "near_dedup_incr_pairs")
                 pairs.count()
-            # (1) any input doc with a verified ref near-dup goes
-            ref_dups = (pairs.filter(F.col("pair_src") == "ref")
-                        .select(F.col("doc_a").alias(id_col)).distinct())
-            # (2) intra-batch near-dups: same cluster→min-id survivor
-            # pipeline as self mode, over the self-tagged pairs
-            view = f"__near_dedup_self_pairs_{_uuid.uuid4().hex[:8]}"
-            pairs.filter(F.col("pair_src") == "self") \
-                 .select("doc_a", "doc_b", "jaccard") \
-                 .createOrReplaceTempView(view)
-            clustered = DupClusters().train(
-                df, "", {**params, "pairsTable": view}, context)
-            non_survivors = (clustered.filter(~F.col("keep"))
-                             .select(id_col))
-            drop_ids = ref_dups.unionByName(non_survivors).distinct()
-            joined = df.join(drop_ids, [id_col], "left_anti")
-            out = eager_materialize(joined, params, context)
-            if out is not joined:
-                spark.catalog.dropTempView(view)
-                pairs.unpersist()
-            return out
-        clustered, cleanup = _cluster_self_pairs(df, params, context)
+            self_pairs = pairs.filter(F.col("pair_src") == "self")
+        else:
+            self_pairs = MinHashDedup().train(df, "", params, context)
+        # near-dups within the input: connected components → min-id
+        # survivor; the refTable mode runs it over the self-tagged pairs
+        clustered = cluster_pairs(df, self_pairs, params, context)
         # anti-join on the NON-survivors (optimization round 11): the
         # survivor list is corpus-sized, but the docs actually removed
         # are only the dup-cluster losers — a tiny set AQE broadcasts,
         # so the corpus is never shuffled to apply the removal.
         # keep=false ⇔ membership in the removal set for every non-null
         # id; NULL-id rows are KEPT (a null key never matches an anti
-        # join) — the defined semantics since round 11, consistent with
-        # the refTable branch above, which always anti-joined.  (The
-        # pre-r11 semi-join on survivors dropped NULL-id rows as a side
-        # effect of null-key matching, not by design.)  Pinned by
+        # join) — the defined semantics since round 11.  (The pre-r11
+        # semi-join on survivors dropped NULL-id rows as a side effect
+        # of null-key matching, not by design.)  Pinned by
         # test_near_dedup_null_id_rows_kept.
-        non_survivors = clustered.filter(~F.col("keep")).select(id_col)
-        joined = df.join(non_survivors, [id_col], "left_anti")
+        drop_ids = clustered.filter(~F.col("keep")).select(id_col)
+        if params.get("refTable"):
+            # plus every input doc with a verified ref near-dup
+            drop_ids = (pairs.filter(F.col("pair_src") == "ref")
+                        .select(F.col("doc_a").alias(id_col)).distinct()
+                        .unionByName(drop_ids).distinct())
+        joined = df.join(drop_ids, [id_col], "left_anti")
         out = eager_materialize(joined, params, context)
-        if out is not joined:
-            # materialized → the lazy plan over the temp view is gone;
-            # safe to drop it (otherwise the uuid view lives out the
-            # session, same lifecycle as other script temp views)
-            cleanup(spark)
+        if params.get("refTable") and out is not joined:
+            pairs.unpersist()
         return out
 
     def explain_params(self):
@@ -1149,8 +1050,9 @@ class SoftDedup(ETAlgorithm):
                 "corpus and has no refTable mode — for incremental "
                 "ingest use NearDedup refTable (removal), then "
                 "SoftDedup over the deduplicated lake")
-        spark = df.sparkSession
-        clustered, cleanup = _cluster_self_pairs(df, params, context)
+        clustered = cluster_pairs(
+            df, MinHashDedup().train(df, "", params, context), params,
+            context)
         # size aggregate over DUP-CLUSTER MEMBERS only (optimization
         # round 11, guide §2.3 — filter before the exchange): every
         # singleton has size 1 / weight 1.0 by definition, so the
@@ -1167,13 +1069,12 @@ class SoftDedup(ETAlgorithm):
         # dedup operator (idCol is the document key); the defined
         # behavior is the singleton default, pinned by
         # test_soft_dedup_duplicate_id_rows.
-        dup_clusters = (clustered.filter(~F.col("keep"))
-                        .select("cluster_id").distinct())
-        sizes = (clustered.join(dup_clusters, "cluster_id", "left_semi")
-                 .groupBy("cluster_id")
-                 .agg(F.count(F.lit(1)).alias("__csz")))
-        ann = (clustered.join(dup_clusters, "cluster_id", "left_semi")
-               .join(sizes, "cluster_id")
+        members = clustered.join(
+            clustered.filter(~F.col("keep")).select("cluster_id").distinct(),
+            "cluster_id", "left_semi")
+        sizes = members.groupBy("cluster_id").agg(
+            F.count(F.lit(1)).alias("__csz"))
+        ann = (members.join(sizes, "cluster_id")
                .select(F.col(id_col),
                        F.col("cluster_id").alias("dup_cluster_id"),
                        F.col("__csz").cast("long")
@@ -1201,10 +1102,7 @@ class SoftDedup(ETAlgorithm):
                               F.when(F.col(id_col).isNotNull(),
                                      F.coalesce(F.col("sample_weight"),
                                                 F.lit(1.0)))))
-        out = eager_materialize(joined, params, context)
-        if out is not joined:
-            cleanup(spark)
-        return out
+        return eager_materialize(joined, params, context)
 
     def explain_params(self):
         own = [("idCol", "document id column", "doc_id"),
@@ -1220,6 +1118,161 @@ class SoftDedup(ETAlgorithm):
                                       "intraBatch")]
         return own + inherited + [("maxIter", "label-propagation bound",
                                    "20")]
+
+
+def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
+                  context=None) -> "DataFrame":
+    """DupClusters over a pairs DataFrame: (idCol, cluster_id, keep)
+    for every df row.  The ET resolves `pairsTable`; NearDedup and
+    SoftDedup pass their verified pairs straight in."""
+    id_col = params.get("idCol", "doc_id")
+    a_col = params.get("pairACol", "doc_a")
+    b_col = params.get("pairBCol", "doc_b")
+    max_iter = get_int(params, "maxIter", 20)
+    spark = df.sparkSession
+    # persist + materialize the edge list ONCE: the pairs are often a
+    # lazy plan over MinHashDedup output (examples/04), and without
+    # this every iteration re-executes the whole upstream LSH
+    # candidate pipeline
+    edges = script_cache(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+             .union(pairs.select(F.col(b_col).alias("src"),
+                                 F.col(a_col).alias("dst"))),
+        context, "dup_edges")
+    edges.count()
+
+    def neighbor_min(lab):
+        return (edges.join(lab.select(F.col("id").alias("dst"),
+                                      F.col("label").alias("nlabel")), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("nlabel").alias("nmin")))
+
+    # Propagate over ONLY the nodes that appear in the pair graph
+    # (optimization round 11, guide §2.3/§1.2): a doc with no pair
+    # row can never change its label — iterating the full corpus
+    # made every round's join + convergence count CORPUS-sized
+    # (at 100 TB: a full-corpus shuffle per round for a dup graph
+    # that is typically <1% of the corpus).  Non-edge docs are
+    # singletons attached by one broadcast-ready left join at the
+    # end.  The df-semi-join keeps the old semantics exactly: an
+    # edge endpoint NOT present in df contributed no label before
+    # (its labels row never existed) and still contributes none —
+    # two df nodes connected only THROUGH an out-of-corpus id must
+    # not merge.  distinct() collapses duplicate-id input rows so
+    # the final join cannot fan out (the old per-row labels carried
+    # identical values for duplicate ids anyway).
+    all_ids = df.select(F.col(id_col).alias("id"))
+    labels_cache = (all_ids.distinct()
+                    .join(edges.select(F.col("src").alias("id"))
+                          .distinct(),
+                          "id", "left_semi")
+                    .select("id", F.col("id").alias("label")).persist())
+    labels = labels_cache
+    ckpt_every = get_int(params, "checkpointEvery", 5)
+    converged, changed = False, -1
+    it = 0
+    # Rounds per ACTION grow 2→2→4→8 while the graph keeps
+    # propagating (optimization round 12, verdict item 7; was a
+    # flat 2 in round 11): each action costs a fixed driver round
+    # trip (planning + AQE + codegen), so a diameter-d chain paid
+    # d/2 actions.  Growing from the THIRD action keeps the first
+    # four rounds identical to round 11 — near-dup graphs are
+    # overwhelmingly shallow (cliques converge in one action,
+    # verified-pair components in ≤2) and must not pay speculative
+    # rounds — while a genuinely deep chain still reaches depth d
+    # in O(log d) actions with the overshoot bounded by the
+    # doubling argument (wasted rounds < rounds needed, each a
+    # no-change join over the dup graph, not the corpus).  The cap
+    # of 8 keeps the per-action lazy plan (one join+agg per round)
+    # shallow enough that analysis stays trivial.  Convergence is
+    # judged on the LAST round's change count alone, which is
+    # sound because min-label propagation is monotone: a round
+    # with zero changes IS the fixpoint, whatever earlier rounds
+    # did.
+    span_target, action_no = 2, 0
+    while it < max_iter and not converged:
+        span = min(span_target, max_iter - it)
+        action_no += 1
+        if action_no >= 2:
+            span_target = min(span_target * 2, 8)
+        cur = labels
+        for _ in range(span):
+            # candidate label via neighbors: min over (own, nbrs')
+            neigh = neighbor_min(cur)
+            # ONE join yields both the next labels and the change
+            # flag (was: a second labels-join purely to count)
+            cur = (cur.join(neigh, "id", "left")
+                   .select("id",
+                           F.least("label", "nmin").alias("label"),
+                           (F.col("nmin") < F.col("label"))
+                           .alias("__chg")))
+        # truncate lineage every few rounds: each round otherwise
+        # deepens the plan (join-on-join-on-...), and by round ~15
+        # analysis time dominates compute
+        if (it // ckpt_every) != ((it + span) // ckpt_every):
+            sc = spark.sparkContext
+            cur = (cur.checkpoint(eager=False)
+                   if sc.getCheckpointDir()
+                   else cur.localCheckpoint(eager=False))
+        cur = cur.persist()
+        changed = cur.filter(F.col("__chg")).count()
+        labels_cache.unpersist()
+        labels_cache = cur
+        labels = cur.drop("__chg")
+        it += span
+        if changed == 0:
+            converged = True
+    if not converged:
+        # the last allowed round may have reached the fixpoint
+        # EXACTLY (changed > 0 but the labels are now final) —
+        # convergence is only observable by a zero-change round, so
+        # run one verification pass before declaring failure: a
+        # correct result tuned to maxIter == component depth must
+        # not become a spurious error (round-8 review finding)
+        still = (labels.join(neighbor_min(labels), "id", "left")
+                 .filter(F.least(F.col("label"), F.col("nmin"))
+                         != F.col("label")).count())
+        if still == 0:
+            converged = True
+    if not converged:
+        # round-8: a component with diameter > maxIter would come
+        # out MISLABELED (split into several clusters, extra docs
+        # marked keep) — fail with the remedy instead of silently
+        # shipping wrong survivors into a dedup pipeline
+        labels_cache.unpersist()
+        edges.unpersist()
+        state = (f"{changed} labels still changing" if changed >= 0
+                 else "no rounds run")
+        raise ValueError(
+            f"DupClusters: label propagation had not converged "
+            f"after maxIter={max_iter} rounds ({state}) — the "
+            f"pair graph has a component "
+            f"with diameter > {max_iter}, and stopping now would "
+            f"mislabel it (splitting one duplicate cluster into "
+            f"several survivors).  Raise maxIter (one join+groupBy "
+            f"per extra round), or pre-partition the pairs if the "
+            f"graph is genuinely that deep.")
+    # singletons (no pair row) re-attach here: labels is distinct
+    # on id and tiny (pair-graph nodes only), so AQE broadcasts it
+    # and the corpus side is never shuffled; a missing label means
+    # "own cluster"
+    out = (all_ids
+           .join(labels.withColumnRenamed("label", "__lab"),
+                 "id", "left")
+           .select(F.col("id").alias(id_col),
+                   F.coalesce(F.col("__lab"), F.col("id"))
+                    .alias("cluster_id"))
+           .withColumn("keep", F.col(id_col) == F.col("cluster_id")))
+    mat = eager_materialize(out, params, context)
+    if mat is not out:
+        labels_cache.unpersist()
+        edges.unpersist()
+    elif context is not None:
+        # lazy path: hand the final label cache to the engine's
+        # end-of-script reaper
+        context.cached_tables[f"__et_dup_labels_{id(labels_cache)}"] = \
+            (labels_cache, "script")
+    return mat
 
 
 @register_et("DupClusters")
@@ -1250,160 +1303,11 @@ class DupClusters(ETAlgorithm):
     """
 
     def train(self, df, path, params, context=None):
-        id_col = params.get("idCol", "doc_id")
         pairs_tbl = params.get("pairsTable")
-        a_col = params.get("pairACol", "doc_a")
-        b_col = params.get("pairBCol", "doc_b")
-        max_iter = get_int(params, "maxIter", 20)
         if not pairs_tbl:
             raise ValueError('DupClusters needs pairsTable="..."')
-        spark = df.sparkSession
-        pairs = spark.table(pairs_tbl)
-        # persist + materialize the edge list ONCE: pairsTable is often a
-        # lazy temp view over MinHashDedup output (examples/04), and
-        # without this every iteration re-executes the whole upstream
-        # LSH candidate pipeline
-        edges = script_cache(
-            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-                 .union(pairs.select(F.col(b_col).alias("src"),
-                                     F.col(a_col).alias("dst"))),
-            context, "dup_edges")
-        edges.count()
-        # Propagate over ONLY the nodes that appear in the pair graph
-        # (optimization round 11, guide §2.3/§1.2): a doc with no pair
-        # row can never change its label — iterating the full corpus
-        # made every round's join + convergence count CORPUS-sized
-        # (at 100 TB: a full-corpus shuffle per round for a dup graph
-        # that is typically <1% of the corpus).  Non-edge docs are
-        # singletons attached by one broadcast-ready left join at the
-        # end.  The df-semi-join keeps the old semantics exactly: an
-        # edge endpoint NOT present in df contributed no label before
-        # (its labels row never existed) and still contributes none —
-        # two df nodes connected only THROUGH an out-of-corpus id must
-        # not merge.  distinct() collapses duplicate-id input rows so
-        # the final join cannot fan out (the old per-row labels carried
-        # identical values for duplicate ids anyway).
-        all_ids = df.select(F.col(id_col).alias("id"))
-        labels_cache = (all_ids.distinct()
-                        .join(edges.select(F.col("src").alias("id"))
-                              .distinct(),
-                              "id", "left_semi")
-                        .select("id", F.col("id").alias("label")).persist())
-        labels = labels_cache
-        ckpt_every = get_int(params, "checkpointEvery", 5)
-        converged, changed = False, -1
-        it = 0
-        # Rounds per ACTION grow 2→2→4→8 while the graph keeps
-        # propagating (optimization round 12, verdict item 7; was a
-        # flat 2 in round 11): each action costs a fixed driver round
-        # trip (planning + AQE + codegen), so a diameter-d chain paid
-        # d/2 actions.  Growing from the THIRD action keeps the first
-        # four rounds identical to round 11 — near-dup graphs are
-        # overwhelmingly shallow (cliques converge in one action,
-        # verified-pair components in ≤2) and must not pay speculative
-        # rounds — while a genuinely deep chain still reaches depth d
-        # in O(log d) actions with the overshoot bounded by the
-        # doubling argument (wasted rounds < rounds needed, each a
-        # no-change join over the dup graph, not the corpus).  The cap
-        # of 8 keeps the per-action lazy plan (one join+agg per round)
-        # shallow enough that analysis stays trivial.  Convergence is
-        # judged on the LAST round's change count alone, which is
-        # sound because min-label propagation is monotone: a round
-        # with zero changes IS the fixpoint, whatever earlier rounds
-        # did.
-        span_target, action_no = 2, 0
-        while it < max_iter and not converged:
-            span = min(span_target, max_iter - it)
-            action_no += 1
-            if action_no >= 2:
-                span_target = min(span_target * 2, 8)
-            cur = labels
-            for _ in range(span):
-                # candidate label via neighbors: min over (own, nbrs')
-                neigh = (edges.join(cur.select("id", "label")
-                                    .withColumnRenamed("id", "dst")
-                                    .withColumnRenamed("label", "nlabel"),
-                                    "dst")
-                         .groupBy(F.col("src").alias("id"))
-                         .agg(F.min("nlabel").alias("nmin")))
-                # ONE join yields both the next labels and the change
-                # flag (was: a second labels-join purely to count)
-                cur = (cur.join(neigh, "id", "left")
-                       .select("id",
-                               F.least("label", "nmin").alias("label"),
-                               (F.col("nmin") < F.col("label"))
-                               .alias("__chg")))
-            # truncate lineage every few rounds: each round otherwise
-            # deepens the plan (join-on-join-on-...), and by round ~15
-            # analysis time dominates compute
-            if (it // ckpt_every) != ((it + span) // ckpt_every):
-                sc = spark.sparkContext
-                cur = (cur.checkpoint(eager=False)
-                       if sc.getCheckpointDir()
-                       else cur.localCheckpoint(eager=False))
-            cur = cur.persist()
-            changed = cur.filter(F.col("__chg")).count()
-            labels_cache.unpersist()
-            labels_cache = cur
-            labels = cur.drop("__chg")
-            it += span
-            if changed == 0:
-                converged = True
-        if not converged:
-            # the last allowed round may have reached the fixpoint
-            # EXACTLY (changed > 0 but the labels are now final) —
-            # convergence is only observable by a zero-change round, so
-            # run one verification pass before declaring failure: a
-            # correct result tuned to maxIter == component depth must
-            # not become a spurious error (round-8 review finding)
-            neigh = (edges.join(labels.withColumnRenamed("id", "dst")
-                                .withColumnRenamed("label", "nlabel"), "dst")
-                     .groupBy(F.col("src").alias("id"))
-                     .agg(F.min("nlabel").alias("nmin")))
-            still = (labels.join(neigh, "id", "left")
-                     .filter(F.least(F.col("label"), F.col("nmin"))
-                             != F.col("label")).count())
-            if still == 0:
-                converged = True
-        if not converged:
-            # round-8: a component with diameter > maxIter would come
-            # out MISLABELED (split into several clusters, extra docs
-            # marked keep) — fail with the remedy instead of silently
-            # shipping wrong survivors into a dedup pipeline
-            labels_cache.unpersist()
-            edges.unpersist()
-            state = (f"{changed} labels still changing" if changed >= 0
-                     else "no rounds run")
-            raise ValueError(
-                f"DupClusters: label propagation had not converged "
-                f"after maxIter={max_iter} rounds ({state}) — the "
-                f"pair graph has a component "
-                f"with diameter > {max_iter}, and stopping now would "
-                f"mislabel it (splitting one duplicate cluster into "
-                f"several survivors).  Raise maxIter (one join+groupBy "
-                f"per extra round), or pre-partition the pairs if the "
-                f"graph is genuinely that deep.")
-        # singletons (no pair row) re-attach here: labels is distinct
-        # on id and tiny (pair-graph nodes only), so AQE broadcasts it
-        # and the corpus side is never shuffled; a missing label means
-        # "own cluster"
-        out = (all_ids
-               .join(labels.withColumnRenamed("label", "__lab"),
-                     "id", "left")
-               .select(F.col("id").alias(id_col),
-                       F.coalesce(F.col("__lab"), F.col("id"))
-                        .alias("cluster_id"))
-               .withColumn("keep", F.col(id_col) == F.col("cluster_id")))
-        mat = eager_materialize(out, params, context)
-        if mat is not out:
-            labels_cache.unpersist()
-            edges.unpersist()
-        elif context is not None:
-            # lazy path: hand the final label cache to the engine's
-            # end-of-script reaper
-            context.cached_tables[f"__et_dup_labels_{id(labels_cache)}"] = \
-                (labels_cache, "script")
-        return mat
+        return cluster_pairs(df, df.sparkSession.table(pairs_tbl), params,
+                             context)
 
     def explain_params(self):
         return [("pairsTable", "table of duplicate pairs", ""),

@@ -458,9 +458,10 @@ class ImageDedup(ETAlgorithm):
 
     `maxHamming="k"` (k>0): banded Hamming LSH candidate pairs — the
     64-bit hash splits into k+1 bands (pigeonhole: two hashes within
-    Hamming distance k agree exactly on at least one band), bucket
-    self-join on (band, bits) with the same window-count skew guard as
-    MinHashDedup, then exact verify bit_count(xor) <= k.  Output
+    Hamming distance k agree exactly on at least one band), candidate
+    pairs from the (band, bits) buckets via the near-dup family's
+    skew-guarded `lsh_candidate_pairs`, each pair carrying both hashes,
+    then exact verify bit_count(xor) <= k.  Output
     (id_a, id_b, hamming), like MinHashDedup's pair contract.  No
     cross join at any point.
 
@@ -469,9 +470,10 @@ class ImageDedup(ETAlgorithm):
     thresholds without re-decoding the corpus."""
 
     def train(self, df, path, params, context=None):
-        from pyspark.sql import Window
-        from streamingpro_spark.operators.base import (ensure_parallelism,
+        from streamingpro_spark.operators.base import (eager_materialize,
+                                                       ensure_parallelism,
                                                        script_cache)
+        from streamingpro_spark.operators.dedup import lsh_candidate_pairs
         id_col = params.get("idCol", "doc_id")
         col = params.get("contentCol", "content")
         htype = params.get("hashType", "ahash")
@@ -496,8 +498,8 @@ class ImageDedup(ETAlgorithm):
             # groupBy, semi-join probe, null filter) — cache it even in
             # the hashCol case: the hash column usually sits on a LAZY
             # view whose upstream (e.g. the ImagePHash decode) would
-            # otherwise re-execute three times.  (The banded path
-            # caches its exploded table below instead.)
+            # otherwise re-execute three times.  (The banded path reads
+            # it once: the hashes ride along with the candidates.)
             hashed = script_cache(hashed, context, "imagededup_hash")
             survivors = (hashed.filter(F.col("__ph").isNotNull())
                          .groupBy("__ph").agg(F.min(id_col).alias(id_col)))
@@ -513,8 +515,6 @@ class ImageDedup(ETAlgorithm):
 
         bands = k + 1
         width = 64 // bands
-        ids = hashed.select(F.col(id_col).alias("__id"), "__ph") \
-                    .filter(F.col("__ph").isNotNull())
         band_struct = F.array(*[
             F.struct(
                 F.lit(j).alias("__band"),
@@ -523,32 +523,21 @@ class ImageDedup(ETAlgorithm):
                     -1 if j == bands - 1
                     else (1 << width) - 1))).alias("__bh"))
             for j in range(bands)])
-        guard_w = Window.partitionBy("__band", "__bh")
-        bounded = script_cache(
-            ids.select("__id", "__ph",
-                       F.explode(band_struct).alias("__e"))
-               .select("__id", "__ph",
-                       F.col("__e.__band").alias("__band"),
-                       F.col("__e.__bh").alias("__bh"))
-               .withColumn("__n", F.count(F.lit(1)).over(guard_w))
-               .filter(F.col("__n") <= max_bucket).drop("__n"),
-            context, "imagededup_buckets")
-        bounded.count()      # materialize before the self-join fans out
-        a, b = bounded.alias("a"), bounded.alias("b")
-        pairs = (a.join(b, (F.col("a.__band") == F.col("b.__band"))
-                        & (F.col("a.__bh") == F.col("b.__bh"))
-                        & (F.col("a.__id") < F.col("b.__id")))
-                 .select(F.col("a.__id").alias("id_a"),
-                         F.col("b.__id").alias("id_b"),
-                         F.bit_count(F.col("a.__ph").bitwiseXOR(
-                             F.col("b.__ph"))).alias("hamming"))
-                 .distinct()
-                 .filter(F.col("hamming") <= k))
-        from streamingpro_spark.operators.base import eager_materialize
-        mat = eager_materialize(pairs, params, context)
-        if mat is not pairs:
-            bounded.unpersist()
-        return mat
+        # the hash rides along with each candidate, so the verify filter
+        # runs before the pair distinct — candidates that share a band
+        # but not the hash can far outnumber the verified pairs
+        pairs = (lsh_candidate_pairs(
+                     hashed.filter(F.col("__ph").isNotNull())
+                     .select(F.col(id_col).alias("__id"), "__ph",
+                             F.inline(band_struct)),
+                     max_bucket, payload="__ph")
+                 .select(F.col("doc_a").alias("id_a"),
+                         F.col("doc_b").alias("id_b"),
+                         F.bit_count(F.col("__pa").bitwiseXOR(
+                             F.col("__pb"))).alias("hamming"))
+                 .filter(F.col("hamming") <= k)
+                 .distinct())
+        return eager_materialize(pairs, params, context)
 
     def explain_params(self):
         return [("idCol", "image id column", "doc_id"),
@@ -561,8 +550,7 @@ class ImageDedup(ETAlgorithm):
                  "LSH pairs within this Hamming distance", "0"),
                 ("maxBucketSize", "skew guard: drop larger LSH buckets",
                  "10000"),
-                ("eagerCache", "materialize pair output, free bucket "
-                 "cache", "true")]
+                ("eagerCache", "materialize the pair output", "true")]
 
 
 @register_et("AudioFingerprint")

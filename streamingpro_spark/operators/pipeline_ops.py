@@ -27,7 +27,9 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import Window, functions as F
 
 from streamingpro_spark.operators.base import (ETAlgorithm, ensure_parallelism,
-                                               get_float, get_int, script_cache)
+                                               get_float, get_int,
+                                               refuse_scratch_collisions,
+                                               script_cache)
 from streamingpro_spark.operators.dedup import (hash_impl,
                                                 portable_hash64, tokens_col,
                                                 words_col,
@@ -1230,13 +1232,7 @@ class DeterministicShard(ETAlgorithm):
                 scratch[c] = "created by the hash-order path"
         if ref_tbl:
             scratch["__off"] = "created by refTable"
-        clash = sorted(set(scratch) & set(df.columns))
-        if clash:
-            why = "; ".join(f"{c}: {scratch[c]}" for c in clash)
-            raise ValueError(
-                f"DeterministicShard: input column(s) {clash} collide "
-                f"with scratch columns this run creates ({why}) — "
-                f"rename them before sharding")
+        refuse_scratch_collisions(df, "DeterministicShard", scratch)
         # the position-hash domain tag: seed-mixed for per-epoch
         # reshuffle; the bare legacy tag otherwise (layouts stay
         # byte-identical to pre-epochSeed runs)

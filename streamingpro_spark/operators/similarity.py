@@ -13,10 +13,10 @@ closest is RowMatrix similarity, SQLRowMatrix.scala):
 - IVFSimilaritySearch  inverted-file cells from sample-trained
   k-means; probes nprobe/nlist of the corpus per query.
 
-Pair-at-a-time dot products (LSH re-rank) run via `zip_with`/
-`aggregate`; bulk query×corpus scoring uses numpy matmul — higher-order
-Catalyst functions are interpreted, so at ≥64 folds/row the Arrow+BLAS
-path wins (see MinHash/SimHash kernel notes).
+Candidate-pair dot products (LSH/IVF re-rank) run as one einsum per
+Arrow batch (`pair_dot_udf`); bulk query×corpus scoring uses numpy
+matmul — higher-order Catalyst functions are interpreted, so at ≥64
+folds/row the Arrow+BLAS path wins (see MinHash/SimHash kernel notes).
 """
 
 from __future__ import annotations
@@ -97,16 +97,6 @@ def bounded_collect(df, max_rows: int, what: str, knob: str,
             f"{what} exceeds {max_rows} rows; {hint} or raise {knob} "
             f"explicitly (driver-memory bound)")
     return rows
-
-
-
-
-def dot_col(a: Column, b: Column) -> Column:
-    """Dot product of two array columns — JVM-side fold.  NOTE: Catalyst
-    higher-order functions are INTERPRETED; fine for a handful of pairs,
-    use `pair_dot_udf` (vectorized Arrow+numpy) in bulk rerank paths."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
 
 
 _pair_dot_udf = None

@@ -20,7 +20,8 @@ from pyspark.sql import Column, functions as F
 from streamingpro_spark.operators.base import (ETAlgorithm,
                                                 ensure_parallelism,
                                                 get_float, get_int,
-                                                pushdown_barrier)
+                                                pushdown_barrier,
+                                                refuse_scratch_collisions)
 from streamingpro_spark.operators.registry import register_et
 from streamingpro_spark.operators.dedup import (hash_impl,
                                                 portable_hash64, tokens_col)
@@ -485,6 +486,8 @@ class C4QualityFilter(ETAlgorithm):
 
     def train(self, df, path, params, context=None):
         col = params.get("contentCol", "text")
+        refuse_scratch_collisions(df, "C4QualityFilter", {
+            "__c4_lines": "line array", "__c4_good": "kept-line array"})
         # spread the single-partition small-file scan (see LanguageID)
         df = ensure_parallelism(df)
         min_words = get_int(params, "minWordsPerLine", 5)
@@ -670,6 +673,8 @@ class GopherQualityFilter(ETAlgorithm):
 
     def train(self, df, path, params, context=None):
         col = params.get("contentCol", "text")
+        refuse_scratch_collisions(df, "GopherQualityFilter", {
+            "__gq_words": "word array", "__gq_lines": "line array"})
         # spread the single-partition small-file scan (see LanguageID)
         df = ensure_parallelism(df)
         min_words = get_int(params, "minWords", 50)

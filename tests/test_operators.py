@@ -1,6 +1,8 @@
 """ET operator e2e tests (reference style: TextSpec/CacheExtSpec/
 TreeBuildExtSpec patterns — SURVEY.md §5)."""
 
+import pytest
+
 
 def test_table_repartition(engine, sf_dir):
     df = engine.execute(f"""
@@ -159,6 +161,74 @@ def test_minhash_dedup_duplicate_ids_no_self_pairs(engine):
     assert got == [(1, 2)], got
 
 
+@pytest.mark.parametrize("mode", ["self", "cross", "intra", "payload"])
+def test_lsh_candidate_pairs_matches_brute_force(spark, mode):
+    """The shared bucket→pair step against itertools over bucket
+    membership: a NULL id (counts toward the cap, never pairs), a
+    duplicate id (no self-pair), an id on both sides (a legal cross
+    pair), and an over-cap bucket on each side (input side drops the
+    bucket, ref side drops only the ref rows).  `payload` is self mode
+    with a per-row column carried into each pair."""
+    import itertools
+    from collections import defaultdict
+    from pyspark.sql import functions as F
+    from streamingpro_spark.operators.dedup import lsh_candidate_pairs
+    cap = 4
+    rows = [(1, 0, 1), (2, 0, 1), (None, 0, 1), (2, 0, 1),  # at the cap
+            (4, 0, 2), (5, 0, 2),                           # 5 on both sides
+            (10, 1, 7), (11, 1, 7), (12, 1, 7), (13, 1, 7),
+            (15, 1, 7),                                      # input over cap
+            (20, 1, 8), (21, 1, 8),                          # ref over cap
+            (40, 2, 9), (41, 2, 9), (None, 2, 9), (None, 2, 9),
+            (42, 2, 9),                                      # over via NULLs
+            (50, 3, 3)]
+    ref = [(1, 0, 1), (5, 0, 2), (6, 0, 2), (14, 1, 7),
+           (30, 1, 8), (31, 1, 8), (32, 1, 8), (33, 1, 8), (34, 1, 8),
+           (51, 3, 3)]
+    schema = "__id long, __band int, __bh long"
+    in_df = spark.createDataFrame(rows, schema)
+    if mode == "payload":
+        in_df = in_df.withColumn("__p", F.col("__id") * 10)
+    got_df = lsh_candidate_pairs(
+        in_df, cap,
+        None if mode in ("self", "payload")
+        else spark.createDataFrame(ref, schema),
+        intra=mode == "intra", payload="__p" if mode == "payload" else None)
+    got = {tuple(r) for r in got_df.collect()}
+
+    buckets = defaultdict(lambda: ([], []))
+    for i, b, h in rows:
+        buckets[(b, h)][0].append(i)
+    for i, b, h in ref:
+        buckets[(b, h)][1].append(i)
+    want = set()
+    for a_ids, b_ids in buckets.values():
+        if len(a_ids) > cap:
+            continue
+        if len(b_ids) > cap:
+            b_ids = []
+        a_ids = [x for x in a_ids if x is not None]
+        if mode in ("self", "intra", "payload"):
+            for x, y in itertools.combinations(sorted(a_ids), 2):
+                if x != y:
+                    want.add((x, y) + {"intra": ("self",),
+                                       "payload": (10 * x, 10 * y)}
+                             .get(mode, ()))
+        if mode in ("cross", "intra"):
+            want |= {(x, y) + (("ref",) if mode == "intra" else ())
+                     for x, y in itertools.product(a_ids, b_ids)}
+    assert got == want
+    # the crafted edges are really exercised
+    pairs = {p[:2] for p in want}
+    if mode != "cross":
+        assert (1, 2) in pairs and (2, 2) not in pairs
+        assert (20, 21) in pairs
+    if mode in ("cross", "intra"):
+        assert (5, 5) in pairs
+        assert not any(b in (30, 31) for _, b in pairs)
+    assert not any(a in (10, 40) for a, _ in pairs)
+
+
 def test_minhash_signatures_precomputed_ref(engine, tmp_path):
     """MinHashSignatures persists the ref corpus's band rows; a later
     MinHashDedup refBandsTable run produces IDENTICAL pairs to plain
@@ -232,6 +302,36 @@ def test_near_dedup_one_shot(engine):
     and refTable="nd_docs" as out2;
     """).collect()
     assert rows2 == []          # every shifted doc matches its original
+
+
+def test_near_and_soft_dedup_lazy_leave_no_views(engine, spark):
+    """With eagerCache="false" the output stays a lazy plan; the
+    verified pairs flow into the clustering as a DataFrame, so no
+    internal `__near_dedup_*` temp view is left in the catalog."""
+    import json
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    dj = "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in
+                   [(1, base), (2, base), (3, "unrelated words here now")])
+
+    def views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("__near_dedup")}
+
+    before = views()
+    engine.execute(f"""
+    set lvj = '''{dj}''';
+    load jsonStr.`lvj` as lv_docs;
+    run lv_docs as NearDedup.`` where eagerCache="false" as lv_a;
+    select doc_id + 10 as doc_id, text from lv_docs as lv_new;
+    run lv_new as NearDedup.`` where refTable="lv_docs"
+        and eagerCache="false" as lv_b;
+    run lv_docs as SoftDedup.`` where eagerCache="false" as lv_c;
+    """)
+    assert sorted(r["doc_id"] for r in spark.table("lv_a").collect()) \
+        == [1, 3]
+    assert spark.table("lv_b").collect() == []
+    assert spark.table("lv_c").count() == 3
+    assert views() == before
 
 
 def test_near_dedup_incremental_intra_batch(engine):
@@ -992,6 +1092,25 @@ def test_image_dedup_hamming_pairs_hashcol(engine):
     """)
     assert [(r["id_a"], r["id_b"]) for r in df3.collect()] == [(1, 2)]
 
+
+
+def test_image_dedup_one_large_bucket_streams_pairs(engine):
+    """One bucket of thousands of ids under the default maxBucketSize
+    (a constant hash — the all-dark-image bucket): every id pair comes
+    back once.  The bucket's n(n-1)/2 pairs leave as separate rows, not
+    as one in-row pair array that cannot spill."""
+    n = 2000
+    df = engine.execute(f"""
+    select id, cast(0 as bigint) as h from range({n}) as flat_hashes;
+    run flat_hashes as ImageDedup.`` where idCol="id" and hashCol="h"
+    and maxHamming="1" as flat_pairs;
+    select count(*) as n, count(distinct id_a, id_b) as d,
+           max(hamming) as hm, sum(cast(id_a >= id_b as int)) as bad
+    from flat_pairs as flat_final;
+    """)
+    r = df.first()
+    assert (r["n"], r["d"], r["hm"], r["bad"]) == (
+        n * (n - 1) // 2, n * (n - 1) // 2, 0, 0)
 
 def test_pagerank(engine):
     df = engine.execute("""

@@ -420,3 +420,88 @@ def test_pushdown_barrier_consumer_where(engine):
     assert "__barrier_url" in plan, plan[:2000]
     for cond in _filter_conditions(plan):
         assert "parse_url" not in cond and "regexp" not in cond.lower(), cond
+
+
+def test_pushdown_barrier_names_are_counted(spark):
+    """Barrier names are `__barrier_<tag>_<n>` from a process-wide
+    counter — no random suffix, so a script's plan text is the same in
+    every fresh process — and two barriers over one input still
+    analyze inside one plan (self-union)."""
+    from streamingpro_spark.operators.base import pushdown_barrier
+    df = spark.range(5)
+    b1, b2 = pushdown_barrier(df, "t"), pushdown_barrier(df, "t")
+    names = [re.search(r"__barrier_t_\w+", b._jdf.queryExecution()
+                       .analyzed().toString()).group(0) for b in (b1, b2)]
+    n1, n2 = (int(re.fullmatch(r"__barrier_t_(\d+)", n).group(1))
+              for n in names)
+    assert n2 > n1, names
+    assert b1.unionByName(b2).count() == 10
+    assert b1.unionByName(b1).count() == 10
+
+
+def _plan_nodes(jplan):
+    """(node, ancestors) for every node of a JVM logical plan."""
+    stack = [(jplan, ())]
+    while stack:
+        node, anc = stack.pop()
+        yield node, anc
+        kids = node.children()
+        for i in range(kids.size()):
+            stack.append((kids.apply(i), anc + (node,)))
+
+
+def _one_line(node):
+    return node.simpleString(1000)
+
+
+def test_minhash_intra_batch_single_bucket_pass(engine, sf_dir):
+    """refTable + intraBatch: cross and self pairs come out of ONE
+    in-row expansion of the bucket aggregate — no Union above it, so
+    the guard window pair over (__band, __bh) and the collect_list
+    aggregate each appear exactly once (a per-kind Union duplicated
+    both, sharing only the exchange)."""
+    df = engine.execute(f"""
+    load parquet.`{sf_dir}/documents.parquet` as documents;
+    select doc_id, text from documents where doc_id % 5 != 0 as mh_ref;
+    select doc_id, text from documents where doc_id % 5 = 0 as mh_batch;
+    run mh_batch as MinHashDedup.`` where refTable="mh_ref"
+        and intraBatch="true" and eagerCache="false" as out;
+    """)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    nodes = list(_plan_nodes(plan))
+    aggs = [(n, anc) for n, anc in nodes if n.nodeName() == "Aggregate"
+            and "collect_list" in _one_line(n)]
+    assert len(aggs) == 1, [_one_line(n) for n, _ in aggs]
+    assert not any(a.nodeName() == "Union" for a in aggs[0][1]), \
+        plan.toString()[:4000]
+    guards = [re.findall(r"AS (__n[ab])#", _one_line(n))
+              for n, _ in nodes if n.nodeName() == "Window"
+              and "__band" in _one_line(n)]
+    assert sorted(sum(guards, [])) == ["__na", "__nb"], guards
+
+
+@pytest.mark.parametrize("script, n_joins", [
+    ("""load parquet.`{sf}/embeddings.parquet` as emb;
+    run emb as EmbeddingDedup.`` where threshold="0.9" and
+        broadcastLimit="0" and eagerCache="false" as out;""", 2),
+    ("""load parquet.`{sf}/documents.parquet` as documents;
+    select doc_id, cast(doc_id % 50 as long) * 2654435761 as h
+    from documents as img_h;
+    run img_h as ImageDedup.`` where hashCol="h" and maxHamming="2"
+        and eagerCache="false" as out;""", 0),
+], ids=["embedding_dedup_lsh", "image_dedup_banded"])
+def test_lsh_pair_paths_have_no_bucket_join(engine, sf_dir, script, n_joins):
+    """EmbeddingDedup's LSH path and ImageDedup's banded path pair
+    through the shared bucket aggregate: no join is keyed on a bucket
+    column.  EmbeddingDedup's two joins bring each pair's vectors back
+    by id for the exact verify; ImageDedup's pairs carry their hashes
+    and join nothing."""
+    df = engine.execute(script.format(sf=sf_dir))
+    plan = df._jdf.queryExecution().optimizedPlan()
+    joins = [_one_line(n) for n, _ in _plan_nodes(plan)
+             if n.nodeName() == "Join"]
+    assert len(joins) == n_joins, plan.toString()[:3000]
+    for j in joins:
+        assert not re.search(r"\b(__band|__bh|__t|__sig)#", j), j
+    assert any("collect_list" in _one_line(n)
+               for n, _ in _plan_nodes(plan)), plan.toString()[:3000]

@@ -1,3 +1,6 @@
+import pytest
+
+
 
 
 def test_main_content_extract(engine):
@@ -79,3 +82,22 @@ def test_main_content_extract(engine):
             select 1 as id, 'x' as html as mce_e;
             run mce_e as MainContentExtract.`` where {bad} as x;
             """)
+
+
+@pytest.mark.parametrize("et,scratch", [
+    ("C4QualityFilter", "__c4_lines"),
+    ("C4QualityFilter", "__c4_good"),
+    ("GopherQualityFilter", "__gq_words"),
+    ("GopherQualityFilter", "__gq_lines"),
+])
+def test_quality_filter_scratch_collision_guard(engine, et, scratch):
+    """An input column named like a quality filter's scratch column is
+    a rendered error (the DeterministicShard guard), not a silent
+    overwrite-then-drop of the caller's column."""
+    with pytest.raises(ValueError,
+                       match=f"{et}: input column\\(s\\) \\['{scratch}'\\] "
+                             f"collide with scratch columns"):
+        engine.execute(f"""
+        select 'Some text here.' as text, 1 as {scratch} as qsc;
+        run qsc as {et}.`` as qsc_out;
+        """)
