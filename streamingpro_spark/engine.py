@@ -24,6 +24,7 @@ from streamingpro_spark import parser as P
 from streamingpro_spark.context import BranchFrame, ExecutionContext
 from streamingpro_spark.expr import evaluate_condition
 from streamingpro_spark.macros import MACROS, expand_macro
+from streamingpro_spark.operators.base import local_table
 
 import weakref
 
@@ -96,7 +97,7 @@ class Engine:
         # catalog.listTables() is a py4j scan that grows with view count
         if spark not in _COMMAND_VIEW_SESSIONS:
             _COMMAND_VIEW_SESSIONS.add(spark)
-            spark.createDataFrame([("command",)], "command: string") \
+            local_table(spark, [("command",)], "command: string") \
                  .createOrReplaceTempView("command")
         if register_functions:
             from streamingpro_spark.functions.builtin import register_all

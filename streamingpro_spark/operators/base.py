@@ -78,6 +78,29 @@ def refuse_scratch_collisions(df: "DataFrame", et_name: str,
             f"running {et_name}")
 
 
+def local_table(spark: "SparkSession", rows, schema) -> "DataFrame":
+    """A table of driver-side rows (tuples, Rows or dicts) under `schema`
+    (a DDL string or a StructType), as a `LocalRelation`.
+
+    `spark.createDataFrame(<python rows>, schema)` plans a LogicalRDD
+    over a PythonRDD, so every action that scans it starts Python
+    workers.  The rows go to the JVM as one `pyarrow.Table` instead,
+    whatever `spark.sql.execution.arrow.pyspark.enabled` says; above
+    `spark.sql.execution.arrow.localRelationThreshold` the JVM keeps
+    them as a JVM-side RDD, still with no Python.  The table may be
+    empty."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    rows = list(rows)
+    table = (LocalDataToArrowConversion.convert(rows, schema, False) if rows
+             else to_arrow_schema(schema).empty_table())
+    return spark.createDataFrame(table, schema)
+
+
 def ensure_parallelism(df: "DataFrame", min_partitions: int | None = None) -> "DataFrame":
     """Spread a narrow input across the cluster before compute-heavy
     per-row work.  Small single-file inputs arrive as 1 partition and

@@ -41,6 +41,8 @@ from pyspark.sql import Column, functions as F
 from streamingpro_spark.operators.base import (ETAlgorithm, eager_materialize,
                                                 ensure_parallelism, get_bool,
                                                 get_float, get_int,
+                                                local_table,
+                                                refuse_scratch_collisions,
                                                 script_cache,
                                                 would_eager_materialize)
 from streamingpro_spark.operators.registry import register_et
@@ -331,16 +333,17 @@ class BloomFilterDedup(ETAlgorithm):
     prunes the probe to candidate duplicates first.
 
     Plan (no reference counterpart; standard incremental-ingest
-    pattern):
-      1. BUILD (one pass over ref, 100% JVM): k = `numHashes` bit
-         positions per row (`pmod(xxhash64(seed_j, content), m)`),
-         explode → `groupBy(pos >> 6)` + `bit_or` of the bit masks —
-         ≤ m/64 word rows collected to the driver (m/8 bytes of
-         bitmap, e.g. ~1.2 GB for 10^9 items at fpp=0.01 — broadcast
-         territory, never a shuffle of the corpus itself).
-      2. PROBE (map-only): the same k positions on the input side
-         (JVM), membership tested against the broadcast bitmap in one
-         vectorized Arrow kernel (`might_dup`).
+    pattern), all of it in the JVM:
+      1. BUILD (one aggregate over ref): k = `numHashes` bit positions
+         per row (`pmod(xxhash64(seed_j, content), m)`), explode →
+         `groupBy(pos >> 6)` + `bit_or` of the bit masks — the bitmap
+         as a table of ≤ m/64 (word, bits) rows, never a shuffle of the
+         corpus itself and never collected to the driver.
+      2. PROBE (map-only): the same k positions on the input side; each
+         position's word comes from a broadcast left join against the
+         word table (one BroadcastExchange, the other k−1 lookups are
+         ReusedExchange) and `getbit` tests its bit.  `might_dup` is
+         true when all k bits are set.
       3. VERIFY (`mode="filter"`): bloom-positive rows only — the true
          dup rate + fpp fraction of the input — semi-join the ref on
          raw content to confirm, then anti-join the confirmed keys
@@ -371,6 +374,12 @@ class BloomFilterDedup(ETAlgorithm):
         fpp = get_float(params, "fpp", 0.01)
         if not 0.0 < fpp < 1.0:
             raise ValueError("fpp must be in (0, 1)")
+        k = get_int(params, "numHashes", 0)
+        if k < 0:
+            raise ValueError(
+                f"BloomFilterDedup: numHashes={k} is negative — pass the "
+                f"number of bit positions per item (> 0), or 0 to derive "
+                f"it from the bitmap size")
         n_exp = get_int(params, "expectedItems", 0)
         ref_nn = ref.filter(F.col(rcol).isNotNull())
         if n_exp <= 0:
@@ -382,7 +391,9 @@ class BloomFilterDedup(ETAlgorithm):
         # ceiling is 8 GB, and a several-GB task-side buffer is a memory
         # hazard well before that.  Default cap 2^35 bits = 4 GB
         # (~2.9e9 items at fpp=0.01).  Failing here beats an OOM deep in
-        # the probe stage.
+        # the probe stage.  The probe broadcasts the bitmap as a word
+        # table at 64 B per word (8x m/8), so from ~2^33 bits on the
+        # broadcast hits the 8 GB ceiling before this cap does.
         max_bits = get_int(params, "maxBits", 1 << 35)
         if m > max_bits:
             raise ValueError(
@@ -394,46 +405,44 @@ class BloomFilterDedup(ETAlgorithm):
                 f"run per shard, use an exact left_anti join instead, or "
                 f"raise maxBits explicitly if you know the cluster can "
                 f"take it.")
-        k = get_int(params, "numHashes", 0) \
-            or max(1, round(m / n_exp * math.log(2)))
+        k = k or max(1, round(m / n_exp * math.log(2)))
+        scratch = {f"__bf_{c}{j}": f"bloom probe {what} of hash {j}"
+                   for j in range(k)
+                   for c, what in (("p", "position"), ("w", "word index"),
+                                   ("b", "word bits"))}
+        refuse_scratch_collisions(df, "BloomFilterDedup", scratch)
 
         def positions(c):
             return [F.pmod(F.xxhash64(F.lit(f"bf{j}:"), F.col(c)),
                            F.lit(m)) for j in range(k)]
 
-        # build: one JVM pass; ≤ m/64 (word, bits) rows reach the driver
+        # build: one JVM aggregate; ≤ m/64 (word, bits) rows, broadcast
+        # by the probe's joins, never collected
         words = (ref_nn
                  .select(F.explode(F.array(*positions(rcol))).alias("__p"))
                  .select(F.shiftright(F.col("__p"), 6).alias("__w"),
                          F.expr("shiftleft(1L, cast(__p % 64 as int))")
                           .alias("__b"))
                  .groupBy("__w").agg(F.bit_or("__b").alias("__bits")))
-        import numpy as np
-        bitmap = np.zeros(m // 64, dtype=np.int64)
-        for r in words.collect():
-            bitmap[r["__w"]] = r["__bits"]
-        bc = spark.sparkContext.broadcast(bitmap.tobytes())
-
-        def _might_kernel(pos_series):
-            import numpy as _np
-            import pandas as _pd
-            bm = _np.frombuffer(bc.value, dtype=_np.int64) \
-                    .view(_np.uint64)
-            out = []
-            for arr in pos_series:
-                if arr is None:
-                    out.append(False)     # null content: never a dup
-                    continue
-                p = _np.asarray(arr, dtype=_np.int64)
-                bits = (bm[p >> 6] >> (p & 63).astype(_np.uint64)) \
-                    & _np.uint64(1)
-                out.append(bool(bits.all()))
-            return _pd.Series(out)
-
-        might = F.pandas_udf(_might_kernel, "boolean")
-        qpos = F.when(F.col(col).isNotNull(),
-                      F.array(*positions(col)))
-        ann = df.withColumn("might_dup", might(qpos))
+        # probe: one broadcast left join per position fetches its word
+        # (words are unique, so no row fans out; a missing word is NULL,
+        # i.e. bit unset).  The k word tables are one plan, so Spark
+        # reuses the first BroadcastExchange for the rest.  Rejected forms:
+        # the bitmap as a scalar-subquery array (k copies in every task),
+        # a crossJoin of a one-row bitmap (an array copy in every row),
+        # and `forall` over one subquery (Spark refuses subqueries in
+        # higher-order functions).
+        probe = df.withColumns({f"__bf_p{j}": p
+                                for j, p in enumerate(positions(col))})
+        hit = F.col(col).isNotNull()      # null content: never a dup
+        for j in range(k):
+            p, w, b = f"__bf_p{j}", f"__bf_w{j}", f"__bf_b{j}"
+            probe = probe.join(F.broadcast(words.toDF(w, b)),
+                               F.col(w) == F.shiftright(F.col(p), 6), "left")
+            hit = hit & (F.getbit(F.col(b), (F.col(p) % 64).cast("int"))
+                         == 1)
+        ann = (probe.withColumn("might_dup", F.coalesce(hit, F.lit(False)))
+               .drop(*scratch))
         if mode == "annotate":
             return ann
         # verify: only bloom-positive rows touch the ref; confirmed
@@ -453,10 +462,10 @@ class BloomFilterDedup(ETAlgorithm):
         # (the operator exists so the daily batch, not the history, is
         # the thing that moves), and it feeds whole dedup chains —
         # without a barrier every downstream plan embeds this plan's
-        # full upstream lineage (curation regexes, the Arrow bloom
-        # probe), and in lake_day_ingest the composed NearDedup actions
-        # each re-analyzed ~12k-line trees, ~6 s of pure driver time
-        # per day at sf0.1.  Truncating here makes every consumer
+        # full upstream lineage (curation regexes, the bloom probe),
+        # and in lake_day_ingest the composed NearDedup actions each
+        # re-analyzed ~12k-line trees, ~6 s of pure driver time per day
+        # at sf0.1.  Truncating here makes every consumer
         # compose over a LogicalRDD leaf.  eagerCache="false" opts out,
         # exactly as in the sibling dedup operators.
         return eager_materialize(joined, params, context)
@@ -470,7 +479,8 @@ class BloomFilterDedup(ETAlgorithm):
                 ("expectedItems", "ref cardinality for sizing "
                  "(0 = count the ref)", "0"),
                 ("fpp", "target false-positive rate", "0.01"),
-                ("numHashes", "override k (default from m/n)", "-"),
+                ("numHashes", "override k (0 or unset = derive from "
+                 "m/n; negative is refused)", "-"),
                 ("maxBits", "fail-fast cap on the bitmap size",
                  str(1 << 35)),
                 ("eagerCache", "filter mode materializes its output when "
@@ -878,8 +888,8 @@ class EmbeddingDedup(ETAlgorithm):
         id_t = df.schema[id_col].dataType.simpleString()
         first = base.select("__v").first()
         if first is None:     # empty corpus: the broadcast path never ran
-            return df.sparkSession.createDataFrame(
-                [], f"id_a {id_t}, id_b {id_t}, cosine double")
+            return local_table(
+                df.sparkSession, [], f"id_a {id_t}, id_b {id_t}, cosine double")
         dim = len(first[0])
         planes = np.random.RandomState(seed).standard_normal(
             (n_tables * bits, dim))
@@ -1438,9 +1448,9 @@ class SemDeDup(ETAlgorithm):
             if not sample_rows:
                 # empty input (a normal upstream-filter outcome) -> zero
                 # pairs, not a numpy axis error on a 1-D empty array
-                return df.sparkSession.createDataFrame(
-                    [], f"id_a {id_t}, id_b {id_t}, cosine double, "
-                        f"cell int")
+                return local_table(
+                    df.sparkSession, [],
+                    f"id_a {id_t}, id_b {id_t}, cosine double, cell int")
             sample = l2_rows(np.array([list(r[0]) for r in sample_rows],
                                       dtype=float))
             nlist = max(1, min(nlist, len(sample)))

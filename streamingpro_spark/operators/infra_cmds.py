@@ -15,7 +15,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from streamingpro_spark.operators.base import ETAlgorithm, get_int
+from streamingpro_spark.operators.base import ETAlgorithm, get_int, local_table
 from streamingpro_spark.operators.registry import register_et
 
 if TYPE_CHECKING:
@@ -62,8 +62,8 @@ class DeltaCommandWrapper(ETAlgorithm):
                     n = int(args[2]) if len(args) > 2 else 1
                     snap = vp.load(context, args[1], {}).repartition(n)
                     vp.save(context, snap, args[1], "overwrite", {}, [])
-                    return spark.createDataFrame(
-                        [(target, len(commits), n)],
+                    return local_table(
+                        spark, [(target, len(commits), n)],
                         "path: string, compactedCommits: int, files: int")
                 if args[0] == "vacuum":
                     # Delta VACUUM semantics: reclaim orphan dirs +
@@ -73,8 +73,8 @@ class DeltaCommandWrapper(ETAlgorithm):
                     retain = float(args[2]) if len(args) > 2 else 168.0
                     orphans, versions = vp.vacuum(context, args[1],
                                                   retain)
-                    return spark.createDataFrame(
-                        [(target, orphans, versions)],
+                    return local_table(
+                        spark, [(target, orphans, versions)],
                         "path: string, orphansRemoved: int, "
                         "versionsRemoved: int")
         if not _has_delta(spark):
@@ -95,7 +95,7 @@ class DeltaCommandWrapper(ETAlgorithm):
             (spark.read.format("delta").load(target)
              .repartition(n).write.format("delta")
              .mode("overwrite").option("dataChange", "false").save(target))
-            return spark.createDataFrame([(target, n)], "path: string, files: int")
+            return local_table(spark, [(target, n)], "path: string, files: int")
         raise ValueError(f"!delta: unknown action {action!r}")
 
 
@@ -159,7 +159,7 @@ class MLSQLEventCommand(ETAlgorithm):
         from streamingpro_spark.streaming.manager import get_listener, http_callback
         listener = get_listener(spark)
         listener.add_callback(events, http_callback(url))
-        return spark.createDataFrame([(url, events)], "url: string, events: string")
+        return local_table(spark, [(url, events)], "url: string, events: string")
 
 
 @register_et("PluginCommand")
@@ -193,8 +193,8 @@ class PluginCommand(ETAlgorithm):
         else:
             importlib.import_module(name)
         added = sorted(set(_reg._REGISTRY) - before)
-        return spark.createDataFrame(
-            [(name, ",".join(added))], "plugin: string, registered: string")
+        return local_table(
+            spark, [(name, ",".join(added))], "plugin: string, registered: string")
 
 
 @register_et("PythonCommand")
@@ -224,14 +224,14 @@ class PythonCommand(ETAlgorithm):
         if not code and "parameters" in params:
             args = json.loads(params["parameters"])
             if args[:1] in (["start"], ["close"]):
-                return spark.createDataFrame([(args[0], "ok")],
-                                             "action: string, status: string")
+                return local_table(spark, [(args[0], "ok")],
+                                   "action: string, status: string")
             if len(args) == 2 and args[0] in ("env", "conf"):
                 k, _, v = args[1].partition("=")
                 if context is not None:
                     context.env[f"__python_{args[0]}_{k}__"] = v
-                return spark.createDataFrame(
-                    [(args[0], k, v)], "kind: string, k: string, v: string")
+                return local_table(
+                    spark, [(args[0], k, v)], "kind: string, k: string, v: string")
             if args and args[0] == "on":
                 if len(args) < 3:
                     raise ValueError(
@@ -258,7 +258,7 @@ class PythonCommand(ETAlgorithm):
             raise ValueError(f"!python: syntax error in user code at line "
                              f"{e.lineno}: {e.msg}") from None
         out = scope.get("output_df")
-        result = (spark.createDataFrame([("ok",)], "status: string")
+        result = (local_table(spark, [("ok",)], "status: string")
                   if out is None else spark.createDataFrame(out))
         if named:
             if context is not None:
@@ -290,7 +290,7 @@ class ModelCommand(ETAlgorithm):
             rows = [(path, 0)]
         else:
             raise ValueError(f"!model: {path} is not a model path")
-        return spark.createDataFrame(rows, "modelPath: string, version: int")
+        return local_table(spark, rows, "modelPath: string, version: int")
 
     def explain_params(self):
         return [("action", "history", "history")]
@@ -327,9 +327,9 @@ class EngineResource(ETAlgorithm):
                 or sc.defaultParallelism
             rows = [(master, int(executors), int(sc.defaultParallelism),
                      int(cores_per))]
-            return spark.createDataFrame(
-                rows, "master: string, executors: int, totalCores: int, "
-                      "executorCores: int")
+            return local_table(
+                spark, rows, "master: string, executors: int, totalCores: int, "
+                "executorCores: int")
         if is_local:
             raise ValueError("Local mode not support this action")
         cpus_s = params.get("cpus", "0").lower()
@@ -363,8 +363,8 @@ class EngineResource(ETAlgorithm):
             jsc.requestTotalExecutors(delta, 0, empty_map)
         else:
             raise ValueError(f"unknown action {action!r}; use add/remove/set")
-        return spark.createDataFrame(
-            [(action, cpus)], "action: string, cpus: int")
+        return local_table(
+            spark, [(action, cpus)], "action: string, cpus: int")
 
     def explain_params(self):
         return [("action", "(empty=status) | add | remove | set", ""),
@@ -427,21 +427,21 @@ class SchedulerCommand(ETAlgorithm):
             rows = [(p, c, svc.last_run.get(p, ""), svc.last_error.get(p, ""),
                      ",".join(svc.dependencies.get(p, [])))
                     for p, c in sorted(svc.timer_jobs.items())]
-            return spark.createDataFrame(
-                rows, "script: string, cron: string, lastRun: string, "
-                      "lastError: string, triggers: string")
+            return local_table(
+                spark, rows, "script: string, cron: string, lastRun: string, "
+                "lastError: string, triggers: string")
 
         if not args or args == ["list"]:
             return job_table()
         if args[0] == "start":
             started = svc.start()
-            return spark.createDataFrame(
-                [("started" if started else "already-running",)],
+            return local_table(
+                spark, [("started" if started else "already-running",)],
                 "scheduler: string")
         if args[0] == "stop":
             stopped = svc.stop()
-            return spark.createDataFrame(
-                [("stopped" if stopped else "not-running",)],
+            return local_table(
+                spark, [("stopped" if stopped else "not-running",)],
                 "scheduler: string")
         def _resolve(p):
             # per-owner sandbox: scheduler scripts resolve through the
@@ -475,7 +475,7 @@ class NothingET(ETAlgorithm):
     used by internal command rewrites): returns an empty 1-column table."""
 
     def train(self, df, path, params, context=None):
-        return df.sparkSession.createDataFrame([], "value: string")
+        return local_table(df.sparkSession, [], "value: string")
 
 
 # the standalone compaction command is the same gated delta surface

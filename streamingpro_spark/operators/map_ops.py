@@ -18,7 +18,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from streamingpro_spark.operators.base import ETAlgorithm, get_bool, get_int
+from streamingpro_spark.operators.base import (ETAlgorithm, get_bool, get_int,
+                                               local_table)
 from streamingpro_spark.operators.registry import register_et
 
 if TYPE_CHECKING:
@@ -42,7 +43,7 @@ class MapET(ETAlgorithm):
     skip_path_prefix = True   # `path` is a table name
 
     def train(self, df, path, params, context=None):
-        return df.sparkSession.createDataFrame([], "dummy: string")
+        return local_table(df.sparkSession, [], "dummy: string")
 
     def load(self, spark, path, params, context=None):
         row = spark.table(path).limit(1).collect()[0].asDict()
@@ -80,8 +81,10 @@ class MapValues(ETAlgorithm):
           .parquet(_data_path(path))
         meta = {"inputCol": input_col, "outputCol": output_col, "mapMissingTo": missing}
         spark = df.sparkSession
-        spark.createDataFrame([meta]).write.mode("overwrite").parquet(_meta_path(path))
-        return spark.createDataFrame([], "dummy: string")
+        local_table(spark, [meta], "inputCol: string, outputCol: string, "
+                    "mapMissingTo: string") \
+            .write.mode("overwrite").parquet(_meta_path(path))
+        return local_table(spark, [], "dummy: string")
 
     def load(self, spark, path, params, context=None):
         meta = spark.read.parquet(_meta_path(path)).collect()[0].asDict()
@@ -123,7 +126,7 @@ class TableToMap(ETAlgorithm):
         val_f = params.get("valueField", "value")
         df.select(F.col(key_f).alias("key"), F.col(val_f).alias("value")) \
           .write.mode("overwrite").parquet(path)
-        return df.sparkSession.createDataFrame([], "dummy: string")
+        return local_table(df.sparkSession, [], "dummy: string")
 
     def load(self, spark, path, params, context=None):
         return {str(r["key"]): str(r["value"])
@@ -161,9 +164,8 @@ class DicOrTableToArray(ETAlgorithm):
         spark = df.sparkSession
         data = self._build(spark, params)
         rows = [(k, v) for k, v in data.items()]
-        model = spark.createDataFrame(rows or [("", [])],
-                                      "name: string, tokens: array<string>") \
-                     .filter(F.col("name") != "")
+        model = local_table(spark, rows,
+                            "name: string, tokens: array<string>")
         model.write.mode("overwrite").parquet(path)
         return model
 
@@ -198,10 +200,9 @@ class ShowTableExt(ETAlgorithm):
         spark = df.sparkSession
         rows = [(t.name, t.database or "", t.tableType, bool(t.isTemporary))
                 for t in spark.catalog.listTables()]
-        return spark.createDataFrame(
-            rows or [("", "", "", False)],
-            "tableName: string, database: string, tableType: string, isTemporary: boolean"
-        ).filter(F.col("tableName") != "")
+        return local_table(
+            spark, rows,
+            "tableName: string, database: string, tableType: string, isTemporary: boolean")
 
 
 @register_et("ShowFunctionsExt")
@@ -215,10 +216,9 @@ class ShowFunctionsExt(ETAlgorithm):
         rows = [(f.name, f.className or "", bool(f.isTemporary))
                 for f in spark.catalog.listFunctions()
                 if pat in f.name.lower()]
-        return spark.createDataFrame(
-            rows or [("", "", False)],
-            "function: string, className: string, isTemporary: boolean"
-        ).filter(F.col("function") != "")
+        return local_table(
+            spark, rows,
+            "function: string, className: string, isTemporary: boolean")
 
 
 @register_et("RunScript")
@@ -260,7 +260,7 @@ class IteratorCommand(ETAlgorithm):
             nonlocal n_batches
             if not rows:
                 return
-            spark.createDataFrame(rows, schema).createOrReplaceTempView("__batch__")
+            local_table(spark, rows, schema).createOrReplaceTempView("__batch__")
             if script:
                 Engine.for_child(spark, context).execute(script)
             n_batches += 1
@@ -271,7 +271,7 @@ class IteratorCommand(ETAlgorithm):
                 flush(batch)
                 batch = []
         flush(batch)
-        return spark.createDataFrame([(n_batches,)], "n_batches: bigint")
+        return local_table(spark, [(n_batches,)], "n_batches: bigint")
 
 
 @register_et("SendMessage")
@@ -287,8 +287,8 @@ class SendMessage(ETAlgorithm):
         content = params.get("content", "")
         frm = params.get("from", "streamingpro@localhost")
         if get_bool(params, "dryRun", True):
-            return spark.createDataFrame(
-                [(to, frm, subject, content, "dry-run")],
+            return local_table(
+                spark, [(to, frm, subject, content, "dry-run")],
                 "to: string, from: string, subject: string, content: string, status: string")
         import smtplib
         from email.mime.text import MIMEText
@@ -298,8 +298,8 @@ class SendMessage(ETAlgorithm):
         port = get_int(params, "smtpPort", 25)
         with smtplib.SMTP(host, port) as s:
             s.sendmail(frm, to.split(","), msg.as_string())
-        return spark.createDataFrame(
-            [(to, frm, subject, content, "sent")],
+        return local_table(
+            spark, [(to, frm, subject, content, "sent")],
             "to: string, from: string, subject: string, content: string, status: string")
 
 
@@ -387,7 +387,7 @@ class JDBCExt(ETAlgorithm):
                                 if k in ("user", "password", "driver")}).load()
         finally:
             conn.close()
-        return spark.createDataFrame([("ok",)], "status: string")
+        return local_table(spark, [("ok",)], "status: string")
 
 
 @register_et("JDBCUpdatExt")
@@ -497,7 +497,7 @@ class JDBCUpdatExt(ETAlgorithm):
                     pass
         finally:
             conn.close()
-        return spark.createDataFrame([(updated,)], "updated: long")
+        return local_table(spark, [(updated,)], "updated: long")
 
     # -- driver: reference-style typed batch in one transaction ----------
     def _driver_batch(self, df, table, keys, set_cols, url, opts):
@@ -540,7 +540,7 @@ class JDBCUpdatExt(ETAlgorithm):
                 ps.close()
         finally:
             conn.close()
-        return spark.createDataFrame([(len(rows),)], "updated: long")
+        return local_table(spark, [(len(rows),)], "updated: long")
 
     def explain_params(self):
         return [("keyCol", "comma-separated key columns (WHERE)", ""),
@@ -570,7 +570,7 @@ class SaveBinaryAsFile(ETAlgorithm):
                     f.write(bytes(r[content_col]))
 
         df.select(name_col, content_col).foreachPartition(write_part)
-        return df.sparkSession.createDataFrame([(out_dir,)], "path: string")
+        return local_table(df.sparkSession, [(out_dir,)], "path: string")
 
 
 @register_et("DownloadExt")
@@ -595,8 +595,9 @@ class DownloadExt(ETAlgorithm):
             data = r.read()
         with open(dst, "wb") as f:
             f.write(data)
-        return df.sparkSession.createDataFrame(
-            [(src, dst, len(data))], "from: string, to: string, bytes: long")
+        return local_table(
+            df.sparkSession, [(src, dst, len(data))],
+            "from: string, to: string, bytes: long")
 
 
 @register_et("UploadFileToServerExt")
@@ -628,8 +629,9 @@ class UploadFileToServerExt(ETAlgorithm):
             headers={"Content-Type": "application/json"})
         with urllib.request.urlopen(req, timeout=30) as r:  # noqa: S310
             status = r.status
-        return df.sparkSession.createDataFrame(
-            [(local, url, int(status))], "path: string, url: string, status: int")
+        return local_table(
+            df.sparkSession, [(local, url, int(status))],
+            "path: string, url: string, status: int")
 
 
 # reference registers both names for table listing (ETRegister.scala

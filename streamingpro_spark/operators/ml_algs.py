@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from streamingpro_spark.operators.base import ETAlgorithm
+from streamingpro_spark.operators.base import ETAlgorithm, local_table
 from streamingpro_spark.operators.registry import register_et
 
 
@@ -73,8 +73,8 @@ class _MLWrapper(ETAlgorithm):
         if path:
             model.write().overwrite().save(os.path.join(real, "model"))
         spark = df.sparkSession
-        return spark.createDataFrame(
-            [(type(model).__name__, real, str(est.extractParamMap()))],
+        return local_table(
+            spark, [(type(model).__name__, real, str(est.extractParamMap()))],
             "modelType: string, path: string, params: string")
 
     def load(self, spark, path, params, context=None):
@@ -212,8 +212,8 @@ class _TfIdfFamily(ETAlgorithm):
                 json.dump({"numFeatures": n, "inputCol": input_col,
                            "outputCol": out_col}, fh)
         spark = df.sparkSession
-        return spark.createDataFrame(
-            [(type(self).__name__, path, n)],
+        return local_table(
+            spark, [(type(self).__name__, path, n)],
             "modelType: string, path: string, numFeatures: int")
 
     def batch_predict(self, df, path, params):

@@ -27,7 +27,7 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import Window, functions as F
 
 from streamingpro_spark.operators.base import (ETAlgorithm, ensure_parallelism,
-                                               get_float, get_int,
+                                               get_float, get_int, local_table,
                                                refuse_scratch_collisions,
                                                script_cache)
 from streamingpro_spark.operators.dedup import (hash_impl,
@@ -888,13 +888,13 @@ class BPETokenizer(ETAlgorithm):
               .limit(max_words))
         word_counts = [(r["__w"], r["__c"]) for r in wc.collect()]
         merges = _bpe_train(word_counts, num_merges)
-        merges_df = spark.createDataFrame(
-            [(i, a, b) for i, (a, b) in enumerate(merges)],
+        merges_df = local_table(
+            spark, [(i, a, b) for i, (a, b) in enumerate(merges)],
             "rank: int, left: string, right: string")
         merges_df.coalesce(1).write.mode("overwrite").parquet(
             f"{path}/merges.parquet")
-        return spark.createDataFrame(
-            [(len(word_counts), len(merges),
+        return local_table(
+            spark, [(len(word_counts), len(merges),
               " ".join(a + b for a, b in merges[:10]))],
             "distinct_words: long, num_merges: long, first_merges: string")
 
@@ -1013,8 +1013,8 @@ class DataMixing(ETAlgorithm):
                      .alias("n_tokens"))),
             context, "datamix_counts")  # consumed by the missing-weight
         # check, the cap agg, and the plan join — one corpus scan, not 3
-        wdf = spark.createDataFrame(
-            sorted(weights.items()), "stratum: string, target_weight: double")
+        wdf = local_table(
+            spark, sorted(weights.items()), "stratum: string, target_weight: double")
         joined = counts.join(wdf, on="stratum", how="left")
         # a weight key that matches NO data (typo'd stratum name) would
         # silently skew the realized mixture: the other strata still
@@ -1474,8 +1474,8 @@ class DeterministicShard(ETAlgorithm):
                     f"would assign positions that collide with the "
                     f"existing layout.  Pass the numShards the "
                     f"reference layout was built with.")
-            offsets = df.sparkSession.createDataFrame(
-                typed, "shard int, __off long")
+            offsets = local_table(
+                df.sparkSession, typed, "shard int, __off long")
             out = (out.join(F.broadcast(offsets), "shard", "left")
                    .withColumn("shard_pos",
                                F.col("shard_pos")

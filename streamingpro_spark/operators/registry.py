@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Type
 
-from streamingpro_spark.operators.base import ETAlgorithm
+from streamingpro_spark.operators.base import ETAlgorithm, local_table
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -66,12 +66,10 @@ def list_algorithms(spark: "SparkSession") -> "DataFrame":
     _ensure_loaded()
     rows = [(n, c().model_type, (c.__doc__ or "").strip().splitlines()[0] if c.__doc__ else "")
             for n, c in sorted(_REGISTRY.items())]
-    return spark.createDataFrame(rows, "name: string, modelType: string, doc: string")
+    return local_table(spark, rows, "name: string, modelType: string, doc: string")
 
 
 def explain_algorithm(spark: "SparkSession", name: str) -> "DataFrame":
     alg = find_algorithm(name)
-    rows = alg.explain_params() or [("", "", "")]
-    df = spark.createDataFrame(rows, "param: string, description: string, defaultValue: string")
-    from pyspark.sql import functions as F
-    return df.filter(F.col("param") != "")
+    return local_table(spark, alg.explain_params(),
+                       "param: string, description: string, defaultValue: string")

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from streamingpro_spark.operators.base import ETAlgorithm
+from streamingpro_spark.operators.base import ETAlgorithm, local_table
 from streamingpro_spark.operators.registry import register_et
 from streamingpro_spark.sources.value_parser import parse_any_schema
 
@@ -263,8 +263,8 @@ class PythonAlg(ETAlgorithm):
         if path:
             os.makedirs(path, exist_ok=True)
         fn(pdf, path)
-        return df.sparkSession.createDataFrame(
-            [("PythonAlg", path, len(pdf))],
+        return local_table(
+            df.sparkSession, [("PythonAlg", path, len(pdf))],
             "modelType: string, path: string, trainRows: long")
 
     def batch_predict(self, df, path, params):

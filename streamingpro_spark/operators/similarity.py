@@ -29,7 +29,8 @@ from pyspark.sql import Column, Window, functions as F
 
 from streamingpro_spark.operators.base import (ETAlgorithm, eager_materialize,
                                                 ensure_parallelism, get_bool,
-                                                get_int, script_cache)
+                                                get_int, local_table,
+                                                script_cache)
 from streamingpro_spark.operators.registry import register_et
 
 if TYPE_CHECKING:
@@ -294,8 +295,8 @@ class SimilaritySearch(ETAlgorithm):
         if not qrows:
             # empty query set (normal filter outcome) — not a numpy
             # AxisError on a (0,)-shaped matrix
-            return df.sparkSession.createDataFrame(
-                [], out_schema + ", rank int")
+            return local_table(
+                df.sparkSession, [], out_schema + ", rank int")
         qids = np.array([r[0] for r in qrows])
         Q = np.array([list(r[1]) for r in qrows], dtype=float)
         qn = np.linalg.norm(Q, axis=1, keepdims=True)
@@ -380,8 +381,8 @@ class LSHSimilaritySearch(ETAlgorithm):
         first = df.select(col).first()
         id_t0 = df.schema[id_col].dataType.simpleString()
         if first is None:
-            return df.sparkSession.createDataFrame(
-                [], f"query_id {id_t0}, neighbor_id {id_t0}, "
+            return local_table(
+                df.sparkSession, [], f"query_id {id_t0}, neighbor_id {id_t0}, "
                     "cosine double, rank int")
         dim = len(first[0])
 
@@ -538,8 +539,8 @@ class IVFSimilaritySearch(ETAlgorithm):
             sample_rows = base.select("__v").limit(sample_n).collect()
             if not sample_rows:
                 # empty corpus: zero neighbors, not a numpy AxisError
-                return df.sparkSession.createDataFrame(
-                    [], out_schema + ", rank int")
+                return local_table(
+                    df.sparkSession, [], out_schema + ", rank int")
             sample = _l2(np.array([list(r[0]) for r in sample_rows],
                                   dtype=float))
             nlist = min(nlist, len(sample))
@@ -563,8 +564,8 @@ class IVFSimilaritySearch(ETAlgorithm):
                                 "maxQueryRows",
                                 hint="narrow it with queryFilter")
         if not qrows:
-            return df.sparkSession.createDataFrame(
-                [], out_schema + ", rank int")
+            return local_table(
+                df.sparkSession, [], out_schema + ", rank int")
         qids = np.array([r[0] for r in qrows])
         Q = _l2(np.array([list(r[1]) for r in qrows], dtype=float))
         probe = np.argsort(-(Q @ cent.T), kind="stable", axis=1)[:, :nprobe]
@@ -691,8 +692,8 @@ class IVFSimilaritySearch(ETAlgorithm):
                                 "rank"))
             # exact re-rank: top-R ADC candidates re-scored against the
             # STORED vectors (|Q|·R rows — bounded, never corpus-sized)
-            qdf = df.sparkSession.createDataFrame(
-                [(q, [float(x) for x in vec])
+            qdf = local_table(
+                df.sparkSession, [(q, [float(x) for x in vec])
                  for q, vec in zip(qids.tolist(), Q)],
                 f"query_id {id_t}, __qv array<double>")
             corpus_vecs = (df.sparkSession.read.parquet(corpus_dir)
@@ -897,8 +898,8 @@ class IVFIndexBuild(ETAlgorithm):
                 # now-missing pq_code column (opaque AnalysisException);
                 # the artifact belongs to the overwritten index, drop it
                 _os.remove(pq_file)
-        return df.sparkSession.createDataFrame(
-            [(path, int(nlist), int(cent.shape[1]),
+        return local_table(
+            df.sparkSession, [(path, int(nlist), int(cent.shape[1]),
               int(books.shape[0]) if books is not None else 0)],
             "path: string, nlist: int, dim: int, pq_subspaces: int")
 

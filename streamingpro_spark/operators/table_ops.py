@@ -13,7 +13,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Window, functions as F
 
 from streamingpro_spark.operators.base import (ETAlgorithm, flatten_unions,
-                                               get_bool, get_int)
+                                               get_bool, get_int, local_table)
 from streamingpro_spark.operators.registry import register_et
 
 if TYPE_CHECKING:
@@ -246,7 +246,8 @@ class SchemaCommand(ETAlgorithm):
         spark = df.sparkSession
         target = spark.table(path) if path else df
         rows = [(f.name, f.dataType.simpleString(), f.nullable) for f in target.schema.fields]
-        return spark.createDataFrame(rows, "col_name: string, data_type: string, nullable: boolean")
+        return local_table(spark, rows,
+                           "col_name: string, data_type: string, nullable: boolean")
 
 
 @register_et("ShowCommand")
@@ -258,26 +259,24 @@ class ShowCommand(ETAlgorithm):
         what = (path or "tables").split("/")[0]
         if what == "tables":
             rows = [(t.name, t.tableType) for t in spark.catalog.listTables()]
-            return spark.createDataFrame(rows or [("", "")],
-                                         "tableName: string, tableType: string") \
-                        .filter(F.col("tableName") != "")
+            return local_table(spark, rows,
+                               "tableName: string, tableType: string")
         if what == "jobs":
             jobs = context.jobs if context is not None else {}
             rows = [(str(k), type(v).__name__) for k, v in jobs.items()]
-            return spark.createDataFrame(rows or [("", "")],
-                                         "jobName: string, jobType: string") \
-                        .filter(F.col("jobName") != "")
+            return local_table(spark, rows,
+                               "jobName: string, jobType: string")
         if what == "functions":
             rows = [(f.name,) for f in spark.catalog.listFunctions()]
-            return spark.createDataFrame(rows, "function: string")
+            return local_table(spark, rows, "function: string")
         if what == "version":
-            return spark.createDataFrame([(spark.version,)], "sparkVersion: string")
+            return local_table(spark, [(spark.version,)], "sparkVersion: string")
         if what == "commands":
             # reference ShowCommand case Array("commands"): the macro table
             from streamingpro_spark.macros import MACROS
             rows = sorted((f"!{n}", tpl) for n, tpl in MACROS.items())
-            return spark.createDataFrame(rows,
-                                         "command: string, template: string")
+            return local_table(spark, rows,
+                               "command: string, template: string")
         if what == "et":
             from streamingpro_spark.operators.registry import (
                 explain_algorithm, list_algorithms)
@@ -295,7 +294,7 @@ class PrintCommand(ETAlgorithm):
     def train(self, df, path, params, context=None):
         text = params.get("input", path)
         print(text)
-        return df.sparkSession.createDataFrame([(text,)], "content: string")
+        return local_table(df.sparkSession, [(text,)], "content: string")
 
 
 @register_et("DropTempTable")
@@ -316,7 +315,7 @@ class EmptyTableWithSchema(ETAlgorithm):
     def train(self, df, path, params, context=None):
         from streamingpro_spark.sources.value_parser import parse_any_schema
         schema = parse_any_schema(params.get("schema", path))
-        return df.sparkSession.createDataFrame([], schema)
+        return local_table(df.sparkSession, [], schema)
 
 
 @register_et("Kill")
@@ -403,24 +402,23 @@ class HDFSCommand(ETAlgorithm):
             target = rest[0]
             rows = [(name, os.path.getsize(os.path.join(target, name)))
                     for name in sorted(os.listdir(target))]
-            return spark.createDataFrame(rows or [("", 0)], "name: string, size: long") \
-                        .filter(F.col("name") != "")
+            return local_table(spark, rows, "name: string, size: long")
         if cmd in ("rm", "-rm", "-rmr"):
             for t in rest:
                 if t in ("-r", "-f"):
                     continue
                 shutil.rmtree(t, ignore_errors=True) if os.path.isdir(t) else (
                     os.path.exists(t) and os.remove(t))
-            return spark.createDataFrame([("ok",)], "result: string")
+            return local_table(spark, [("ok",)], "result: string")
         if cmd in ("mkdir", "-mkdir"):
             for t in rest:
                 if t != "-p":
                     os.makedirs(t, exist_ok=True)
-            return spark.createDataFrame([("ok",)], "result: string")
+            return local_table(spark, [("ok",)], "result: string")
         if cmd in ("cp", "-cp"):
             src, dst = rest[-2], rest[-1]
             shutil.copytree(src, dst) if os.path.isdir(src) else shutil.copy(src, dst)
-            return spark.createDataFrame([("ok",)], "result: string")
+            return local_table(spark, [("ok",)], "result: string")
         raise ValueError(f"!fs: unsupported command {cmd!r}")
 
 
@@ -435,7 +433,7 @@ class ProfilerCommand(ETAlgorithm):
             sql = params["sql"]
             plan = spark.sql(sql)._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            return spark.createDataFrame([(plan,)], "plan: string")
+            return local_table(spark, [(plan,)], "plan: string")
         raise ValueError("!profiler: only 'explain' supported")
 
 
@@ -450,8 +448,7 @@ class SyntaxAnalyzeExt(ETAlgorithm):
         plan = spark._jvm.org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parsePlan(sql)
         import re as _re
         tables = sorted(set(_re.findall(r"UnresolvedRelation \[([^\]]+)\]", plan.treeString())))
-        return spark.createDataFrame([(t,) for t in tables] or [("",)],
-                                     "tableName: string").filter(F.col("tableName") != "")
+        return local_table(spark, [(t,) for t in tables], "tableName: string")
 
 
 @register_et("AsOfJoin")
@@ -538,8 +535,9 @@ class DataConstraints(ETAlgorithm):
         row = df.agg(*aggs).first()
         out = [(rule, col, int(row[i] or 0), (row[i] or 0) == 0)
                for i, (rule, col) in enumerate(meta)]
-        return df.sparkSession.createDataFrame(
-            out, "rule string, column string, violations long, passed boolean")
+        return local_table(
+            df.sparkSession, out,
+            "rule string, column string, violations long, passed boolean")
 
     def explain_params(self):
         return [("rules", "constraints json (notNull/unique/min/max)", "{}")]

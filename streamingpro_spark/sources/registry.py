@@ -15,6 +15,8 @@ from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import functions as F
 
+from streamingpro_spark.operators.base import local_table
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
     from streamingpro_spark.context import ExecutionContext
@@ -542,8 +544,8 @@ def _load_crawlersql(ctx, path, options):
                    flags=_re.S | _re.I)
     body = _re.sub(r"<[^>]+>", " ", body)
     body = _re.sub(r"\s+", " ", body).strip() or None
-    return ctx.spark.createDataFrame(
-        [(path, html, title, body)],
+    return local_table(
+        ctx.spark, [(path, html, title, body)],
         "url: string, html: string, title: string, body: string")
 
 
@@ -561,7 +563,7 @@ def _load_csv_str(ctx, path, options):
 @register_loader("script")
 def _load_script(ctx, path, options):
     content = ctx.env.get(path, "")
-    return ctx.spark.createDataFrame([(path, content)], "name: string, content: string")
+    return local_table(ctx.spark, [(path, content)], "name: string, content: string")
 
 
 @register_loader("jdbc")
@@ -620,24 +622,20 @@ def _load_system_table(ctx, path, options):
     """Engine introspection tables (MLSQLSystemTables.scala:19-70)."""
     spark = ctx.spark
     if path in ("jobs", "jobs/list"):
-        rows = [(k, str(v)) for k, v in ctx.jobs.items()] or [("", "")]
-        return spark.createDataFrame(rows, "name: string, info: string") \
-                    .filter(F.col("name") != "")
+        rows = [(k, str(v)) for k, v in ctx.jobs.items()]
+        return local_table(spark, rows, "name: string, info: string")
     if path == "datasources":
         fmts = sorted(set(_LOADERS) | _FILE_FORMATS)
-        return spark.createDataFrame([(f,) for f in fmts], "format: string")
+        return local_table(spark, [(f,) for f in fmts], "format: string")
     if path.startswith("datasources/params/"):
         fmt = path.rsplit("/", 1)[-1]
-        return spark.createDataFrame([(fmt, "path", "string")],
-                                     "format: string, param: string, type: string")
+        return local_table(spark, [(fmt, "path", "string")],
+                           "format: string, param: string, type: string")
     if path == "tables":
         ts = [(t.name, t.tableType) for t in spark.catalog.listTables()]
-        return spark.createDataFrame(ts or [("", "")], "name: string, type: string") \
-                    .filter(F.col("name") != "")
+        return local_table(spark, ts, "name: string, type: string")
     if path == "env":
-        rows = list(ctx.env.items()) or [("", "")]
-        return spark.createDataFrame(rows, "k: string, v: string") \
-                    .filter(F.col("k") != "")
+        return local_table(spark, list(ctx.env.items()), "k: string, v: string")
     raise ValueError(f"unknown system table: _mlsql_.`{path}`")
 
 
@@ -660,8 +658,8 @@ def _load_mlsql_api(ctx, path, options):
             ("/health", "GET", "liveness"),
             ("/upload_file", "POST", "stage a file on the server"),
             ("/download", "GET", "stream a staged file back")]
-    return ctx.spark.createDataFrame(
-        rows, "path: string, method: string, description: string")
+    return local_table(
+        ctx.spark, rows, "path: string, method: string, description: string")
 
 
 @register_loader("mlsqlConf")
@@ -670,7 +668,7 @@ def _load_mlsql_conf(ctx, path, options):
     `mlsqlConf`)."""
     rows = [(k, v) for k, v in ctx.spark.sparkContext.getConf().getAll()]
     rows += [(f"env.{k}", v) for k, v in ctx.env.items()]
-    return ctx.spark.createDataFrame(rows, "k: string, v: string")
+    return local_table(ctx.spark, rows, "k: string, v: string")
 
 
 @register_loader("unStructured")
@@ -711,8 +709,8 @@ def _load_model_example(ctx, path, options):
     alg = find_algorithm(path)
     doc = getattr(alg, "doc", "") or f"{path}: see modelParams.`{path}`"
     example = getattr(alg, "code_example", "")
-    return ctx.spark.createDataFrame([(path, doc, example)],
-                                     "name: string, doc: string, codeExample: string")
+    return local_table(ctx.spark, [(path, doc, example)],
+                       "name: string, doc: string, codeExample: string")
 
 
 @register_loader("modelExplain")
@@ -739,7 +737,7 @@ def _load_model_explain_saved(ctx, path, options):
                         rows.append((k, _json.dumps(v)))
     if not rows:
         rows = [("path", _json.dumps(real))]
-    return ctx.spark.createDataFrame(rows, "name: string, value: string")
+    return local_table(ctx.spark, rows, "name: string, value: string")
 
 
 # ---------------------------------------------------------------------------

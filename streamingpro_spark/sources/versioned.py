@@ -51,6 +51,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from streamingpro_spark.operators.base import local_table
 from streamingpro_spark.sources import fsio
 
 if TYPE_CHECKING:
@@ -407,8 +408,8 @@ def load(ctx: "ExecutionContext", path: str,
                          f"(missing {_manifest(real)})")
     spark = ctx.spark
     if options.get("history", "").lower() == "true":
-        return spark.createDataFrame(
-            [(c["version"], c["mode"], c["timestamp"]) for c in commits],
+        return local_table(
+            spark, [(c["version"], c["mode"], c["timestamp"]) for c in commits],
             "version: long, mode: string, timestamp: long")
     by_version = {c["version"]: c for c in commits}
     latest = commits[-1]["version"]

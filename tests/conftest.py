@@ -34,3 +34,29 @@ def engine(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_PYTHON_EXEC_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                      "PythonMapInArrow", "FlatMapGroupsInPandas")
+
+
+def assert_no_python(df):
+    """Fail when running `df` would start a Python worker: a Python eval
+    node in its physical plan, or a leaf scanning a PythonRDD (what
+    `spark.createDataFrame(<python rows>)` plans) in its analyzed plan."""
+    import re
+    qe = df._jdf.queryExecution()
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution \
+        .ExplainMode.fromString("formatted")
+    plan = qe.explainString(mode)
+    found = [n for n in _PYTHON_EXEC_NODES if re.search(rf"\b{n}\b", plan)]
+    assert not found, f"Python eval node(s) {found} in plan:\n{plan}"
+    stack = [qe.analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            lineage = node.rdd().toDebugString()
+            assert "PythonRDD" not in lineage, \
+                f"LogicalRDD over a PythonRDD:\n{lineage}"
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))

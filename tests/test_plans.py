@@ -6,6 +6,8 @@ import re
 
 import pytest
 
+from conftest import assert_no_python
+
 
 def _plan(spark, name, sf_dir):
     import __spark_entry__ as em
@@ -233,7 +235,7 @@ def test_deterministic_shard_parallel_walk_plan(spark, sf_dir):
     je = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = je.explainString(mode)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python(df)
     assert "rangepartitioning" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     # every exchange is a hash partition or the broadcast back
@@ -268,7 +270,7 @@ def test_deterministic_shard_bucketed_curriculum_plan(spark, sf_dir):
         .fromString("formatted")
     plan = je.explainString(mode)
     assert "rangepartitioning" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python(df)
     n_bc = len(re.findall(r"\(\d+\) BroadcastExchange", plan))
     assert n_bc == 1, plan
     win = [ln for ln in plan.splitlines()
