@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from streamingpro_spark import parser as P
+from streamingpro_spark.macros import MACROS, expand_macro
 
 if TYPE_CHECKING:
     from pyspark.sql import SparkSession
@@ -55,7 +56,10 @@ _FROM_JOIN_RE = re.compile(
     r"\b(?:from|join)\s+([A-Za-z_][\w]*(?:\.[\w]+)?)", re.IGNORECASE)
 
 
-def _tables_in_sql(sql: str, spark: "SparkSession | None") -> list[str]:
+def tables_in_sql(sql: str, spark: "SparkSession | None") -> list[str]:
+    """The tables a SQL text reads: the ``UnresolvedRelation`` leaves of
+    Spark's own parse (CTE aliases excluded, ``db.tbl`` kept whole),
+    else a FROM/JOIN scan when there is no session or the parse fails."""
     if spark is not None:
         try:
             jplan = (spark._jsparkSession.sessionState().sqlParser()
@@ -80,60 +84,47 @@ def _tables_in_sql(sql: str, spark: "SparkSession | None") -> list[str]:
 
 
 def analyze(script: str, spark: "SparkSession | None" = None,
-            env: dict[str, str] | None = None) -> AnalyzeResult:
-    """Analyze without executing (REST `executeMode=analyze`)."""
+            env: dict[str, str] | None = None,
+            fetch_include=None) -> AnalyzeResult:
+    """Analyze without executing (``Engine.analyze``, the auth pass and
+    REST ``executeMode=analyze``).  Statements come from
+    ``parser.walk``, so ``${var}``, ``set`` and includes resolve exactly
+    as for ``Engine.validate``."""
     result = AnalyzeResult()
-    env = dict(env or {})
-    for raw in P.split_statements(script):
-        text = P.template_merge(raw, env)
-        try:
-            stmt = P.parse_statement(text)
-        except Exception:
-            continue
-        kind = type(stmt).__name__
-        if kind == "CommandStmt":
+    for walked in P.walk(script, env or {}, fetch_include):
+        stmt = walked.stmt
+        if isinstance(stmt, P.CommandStmt):
             # macros read real tables (`!split docs ...` → run docs as
             # RateSampler) — expand so the auth pass sees them
-            from streamingpro_spark.macros import MACROS, expand_macro
             if stmt.command not in MACROS:
                 continue
             try:
                 stmt = P.parse_statement(expand_macro(stmt))
             except Exception:
                 continue
-            kind = type(stmt).__name__
-        if kind == "SetStmt":
-            val = stmt.value if isinstance(stmt.value, str) else ""
-            # execution OVERWRITES on re-assignment (only defaultParam
-            # keeps the first value) — the analyzer must resolve ${var}
-            # the same way or auth checks the wrong path
-            if stmt.options.get("type", "") == "defaultParam":
-                env.setdefault(stmt.key, val)
-            else:
-                env[stmt.key] = val
-        elif kind == "LoadStmt":
+        if isinstance(stmt, P.LoadStmt):
             src = ("file" if stmt.format in _FILE_TYPES else stmt.format)
             result.inputs.append(TableRef(stmt.path, "load", src))
             result.outputs.append(TableRef(stmt.table, "load", "temp"))
-        elif kind == "SelectStmt":
-            for t in _tables_in_sql(stmt.sql, spark):
+        elif isinstance(stmt, P.SelectStmt):
+            for t in tables_in_sql(stmt.sql, spark):
                 result.inputs.append(TableRef(t, "select", "temp"))
             result.outputs.append(TableRef(stmt.table, "select", "temp"))
-        elif kind == "SaveStmt":
+        elif isinstance(stmt, P.SaveStmt):
             result.inputs.append(TableRef(stmt.table, "save", "temp"))
             result.outputs.append(TableRef(stmt.path, "save",
                                            "file" if stmt.format in _FILE_TYPES
                                            else stmt.format))
-        elif kind == "RegisterStmt":
+        elif isinstance(stmt, P.RegisterStmt):
             # `register Alg.`path` as fn` READS the model path (or the
             # ScriptUDF source table) — the auth pass must see it
             result.inputs.append(TableRef(stmt.path, "register", "model"))
-        elif kind == "TrainStmt":
+        elif isinstance(stmt, P.TrainStmt):
             result.inputs.append(TableRef(stmt.table, stmt.verb, "temp"))
             if stmt.out_table:
                 result.outputs.append(TableRef(stmt.out_table, stmt.verb, "temp"))
-        elif kind == "RawSqlStmt":
-            op = text.strip().split(None, 1)[0].lower()
-            for t in _tables_in_sql(text, spark):
+        elif isinstance(stmt, P.RawSqlStmt):
+            op = stmt.sql.strip().split(None, 1)[0].lower()
+            for t in tables_in_sql(stmt.sql, spark):
                 result.inputs.append(TableRef(t, op, "hive"))
     return result

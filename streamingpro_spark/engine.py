@@ -1,10 +1,12 @@
 """The script engine: multi-pass execute of an MLSQL-style script.
 
 Mirrors the reference lifecycle (streaming/dsl/ScriptSQLExec.scala:80-148):
-  pass A  include expansion (≤10 iterations to fixpoint, :95-109)
+  pass A  include expansion (≤10 deep, :95-109)
   pass B  preprocess — !cmd macro rewrite + ${var} substitution (:111-115)
   pass E  physical — per-statement adaptor dispatch (:144-147, 372-412),
           honoring !if/!else branch context (:326-369)
+Execution runs A and B per statement, in order, so a variable set
+earlier in the script is visible to a later include.
 
 The optional passes are first-class too:
   pass C  grammar validate — ``validate()`` dry-parses statements
@@ -13,6 +15,10 @@ The optional passes are first-class too:
   pass D  auth — ``analyze()`` returns the MLSQLTable-style access list
           (Protocal.scala:67-111); a ``table_auth`` hook enforces it
           before execution (ScriptSQLExec.scala:122-142)
+
+Passes C and D (and the ``table_auth`` pre-pass) reach statements
+through ONE walker, ``parser.walk``, which runs A and B the way
+execution does, without executing anything.
 """
 
 from __future__ import annotations
@@ -20,10 +26,11 @@ from __future__ import annotations
 import os
 from typing import TYPE_CHECKING
 
+from streamingpro_spark import analyzer
 from streamingpro_spark import parser as P
 from streamingpro_spark.context import BranchFrame, ExecutionContext
 from streamingpro_spark.expr import evaluate_condition
-from streamingpro_spark.macros import MACROS, expand_macro
+from streamingpro_spark.macros import BRANCH_COMMANDS, check_command, expand_macro
 from streamingpro_spark.operators.base import local_table
 
 import weakref
@@ -82,7 +89,7 @@ class Engine:
         self.context = ExecutionContext(spark=spark, owner=owner, home=home)
         #: pluggable pre-execution table auth (reference pass D,
         #: ScriptSQLExec.scala:122-142 + TableAuth): fn(owner, tables)
-        #: where tables is the analyzer's MLSQLTable-style dict list;
+        #: where tables is ``analyze(script).as_dict()``;
         #: return False (or raise) to reject the script.  Stored on the
         #: CONTEXT so sub-script executors (RunScript, foreachBatch
         #: batchScript) inherit it — otherwise `!runScript '''...'''`
@@ -131,26 +138,7 @@ class Engine:
         tls = self.context.tls
         if not getattr(tls, "exec_depth", 0):
             tls.vp_txn_writes = set()
-        table_auth = self.context.extra.get("table_auth")
-        if table_auth is not None:
-            from streamingpro_spark.analyzer import analyze
-            # analyze the INCLUDE-EXPANDED script — a table hidden
-            # behind `include` must not escape the auth pass.
-            # best_effort: set-then-include defines the variable at
-            # runtime; those includes are auth-checked at splice time
-            # (the IncludeStmt branch of _execute_statement)
-            expanded = ";\n".join(
-                self._expand_includes(P.split_statements(script),
-                                      best_effort=True))
-            tables = analyze(expanded, self.spark,
-                             env=self.context.env).as_dict()
-            verdict = table_auth(self.context.owner, tables)
-            if verdict is False:
-                raise PermissionError(
-                    f"table auth rejected script for owner "
-                    f"{self.context.owner!r}: "
-                    f"{[t['table'] for t in tables['inputs']]} -> "
-                    f"{[t['table'] for t in tables['outputs']]}")
+        self._authorize(script, "script")
         tls.exec_depth = getattr(tls, "exec_depth", 0) + 1
         try:
             stmts = P.split_statements(script)
@@ -221,54 +209,59 @@ class Engine:
         sqlParser.parsePlan — WITHOUT executing anything, so a syntax
         error in statement N surfaces before statement 1 runs.
         Returns [] when the script is clean, else one dict per bad
-        statement.  Statements still containing unresolved ${vars}
-        (runtime-substituted) are skipped, like the reference's
-        runtime-mode templating."""
+        statement; ``statement`` is the top-level index (an include's,
+        for statements spliced from it).  Statements come from
+        ``parser.walk``, like ``analyze``'s.  Statements still
+        containing unresolved ${vars} (runtime-substituted) are
+        skipped, like the reference's runtime-mode templating."""
         errors: list[dict] = []
-        env = dict(self.context.env)
         jparser = self.spark._jsparkSession.sessionState().sqlParser()
-        for i, raw in enumerate(P.split_statements(script)):
-            merged = P.template_merge(raw, env)
-            if "${" in merged:
+        for w in P.walk(script, self.context.env, self._fetch_include):
+            if "${" in w.text:
                 continue
-            kind = P.statement_kind(merged)
-            if kind == "command":
-                name = merged.strip().split()[0].lstrip("!")
-                if name not in MACROS and name not in (
-                        "if", "elif", "else", "then", "fi"):
-                    errors.append({"statement": i, "kind": kind,
-                                   "error": f"unknown command !{name}",
-                                   "text": raw.strip()[:200]})
-                continue
-            try:
-                stmt = P.parse_statement(merged)
-            except Exception as e:
-                # ANY parse failure is a finding, not a validator crash —
-                # short statements raise IndexError in the token walkers
-                errors.append({"statement": i, "kind": kind,
-                               "error": f"{type(e).__name__}: {e}",
-                               "text": raw.strip()[:200]})
-                continue
-            if isinstance(stmt, P.SetStmt):
-                val = stmt.value if isinstance(stmt.value, str) else ""
-                # real `set` semantics overwrite; only type=defaultParam
-                # keeps an earlier assignment
-                if stmt.options.get("type", "") == "defaultParam":
-                    env.setdefault(stmt.key, val)
-                else:
-                    env[stmt.key] = val
-                continue
-            sql = stmt.sql if isinstance(stmt, (P.SelectStmt,
-                                                P.RawSqlStmt)) else None
-            if sql:
+            stmt, error = w.stmt, None
+            if w.error is not None:
+                # ANY parse failure is a finding, not a validator crash
+                error = f"{type(w.error).__name__}: {w.error}"
+            elif isinstance(stmt, P.CommandStmt):
                 try:
-                    jparser.parsePlan(sql)
+                    check_command(stmt.command)
+                except ValueError as e:
+                    error = str(e)
+            elif isinstance(stmt, (P.SelectStmt, P.RawSqlStmt)) and stmt.sql:
+                try:
+                    jparser.parsePlan(stmt.sql)
                 except Exception as e:
-                    msg = str(e).split("\n")[0]
-                    errors.append({"statement": i, "kind": kind,
-                                   "error": msg,
-                                   "text": raw.strip()[:200]})
+                    error = str(e).split("\n")[0]
+            if error is not None:
+                errors.append({"statement": w.index,
+                               "kind": P.statement_kind(w.text),
+                               "error": error, "text": w.raw.strip()[:200]})
         return errors
+
+    def analyze(self, script: str) -> "analyzer.AnalyzeResult":
+        """Pass D: which tables the script reads and writes, without
+        executing it (reference ScriptSQLExec.scala:122-142 +
+        Protocal.scala:67-111).  Includes are spliced and ``${var}``
+        resolves against the session env plus the script's own
+        ``set``s; an include only resolvable at runtime stays unexpanded
+        (``_execute_statement`` auth-checks it when it splices it)."""
+        return analyzer.analyze(script, self.spark, self.context.env,
+                                self._fetch_include)
+
+    def _authorize(self, script: str, what: str) -> None:
+        """Run the ``table_auth`` hook over ``analyze(script)``; raise
+        PermissionError when it returns False."""
+        table_auth = self.context.extra.get("table_auth")
+        if table_auth is None:
+            return
+        tables = self.analyze(script).as_dict()
+        if table_auth(self.context.owner, tables) is False:
+            raise PermissionError(
+                f"table auth rejected {what} for owner "
+                f"{self.context.owner!r}: "
+                f"{[t['table'] for t in tables['inputs']]} -> "
+                f"{[t['table'] for t in tables['outputs']]}")
 
     def close(self) -> None:
         """Session teardown: unpersist every remaining cache and delete
@@ -297,50 +290,21 @@ class Engine:
         ctx.checkpoint_files.clear()
 
     # ------------------------------------------------------------------
-    def _expand_includes(self, stmts: list[str], depth: int = 0,
-                         best_effort: bool = False) -> list[str]:
-        """Pass A: textual include splice to fixpoint, ≤10 nesting
-        (ScriptSQLExec.scala:95-109).  ``best_effort`` keeps unresolvable
-        includes in place instead of failing — the auth pre-pass uses it
-        because set-then-include scripts define the variable at RUNTIME
-        (those includes are auth-checked at splice time instead)."""
-        if depth > 10:
-            raise RuntimeError("include nesting exceeds 10 levels")
-        out: list[str] = []
-        changed = False
-        for raw in stmts:
-            if P.statement_kind(raw) == "include":
-                try:
-                    stmt = P.parse_statement(
-                        P.template_merge(raw, self.context.env))
-                    text = self._fetch_include(stmt)
-                except Exception:
-                    if best_effort:
-                        out.append(raw)
-                        continue
-                    raise
-                out.extend(P.split_statements(text))
-                changed = True
-            else:
-                out.append(raw)
-        return (self._expand_includes(out, depth + 1, best_effort)
-                if changed else out)
-
-    def _fetch_include(self, stmt: P.IncludeStmt) -> str:
+    def _fetch_include(self, stmt: P.IncludeStmt, env: dict[str, str]) -> str:
         """Include sources (reference IncludeAdaptor.scala:74-79:
         hdfs/http/store/plugin/lib/local).  Here: local file or a script
-        stored in an env variable (``include script.`varname```)."""
+        stored in a variable of ``env`` (``include script.`varname```)."""
         fmt = stmt.format
         if fmt in ("local", "hdfs", "file", "project", "src"):
             path = self.context.resource_real_path(stmt.path)
             with open(path, encoding="utf-8") as f:
                 return f.read()
         if fmt == "script":
-            if stmt.path not in self.context.env:
+            if stmt.path not in env:
                 raise ValueError(
                     f"include script.`{stmt.path}`: no such variable "
                     f"(set {stmt.path} = '''...''' first)")
-            return self.context.env[stmt.path]
+            return env[stmt.path]
         # reference IncludeAdaptor.scala:74-84 non-local sources —
         # documented drops with the reason and the local alternative
         if fmt == "http":
@@ -369,19 +333,13 @@ class Engine:
 
         # branch-control commands always execute (they flip branch state)
         if kind == "command":
-            merged = P.template_merge(raw, ctx.env)
-            cmd = P.parse_statement(merged)
-            assert isinstance(cmd, P.CommandStmt)
-            if cmd.command in ("if", "elif", "else", "fi", "then"):
+            cmd = P.parse_statement(P.template_merge(raw, ctx.env))
+            if cmd.command in BRANCH_COMMANDS:
                 self._branch_command(cmd)
                 return
             if not ctx.branch_active():
                 return
-            if cmd.command not in MACROS:
-                from streamingpro_spark.macros import DOCUMENTED_DROP_MACROS
-                if cmd.command in DOCUMENTED_DROP_MACROS:
-                    raise ValueError(DOCUMENTED_DROP_MACROS[cmd.command])
-                raise ValueError(f"unknown command !{cmd.command}")
+            check_command(cmd.command)
             raw = expand_macro(cmd)
             kind = P.statement_kind(raw)
 
@@ -396,20 +354,13 @@ class Engine:
             # so variables set earlier in the script are visible
             self._include_depth = getattr(self, "_include_depth", 0) + 1
             try:
-                if self._include_depth > 10:
-                    raise RuntimeError("include nesting exceeds 10 levels")
-                text = self._fetch_include(stmt)
-                table_auth = ctx.extra.get("table_auth")
-                if table_auth is not None:
-                    # runtime-resolved includes missed the pre-pass —
-                    # enforce the policy on the spliced text now
-                    from streamingpro_spark.analyzer import analyze
-                    tables = analyze(text, self.spark,
-                                     env=ctx.env).as_dict()
-                    if table_auth(ctx.owner, tables) is False:
-                        raise PermissionError(
-                            f"table auth rejected included script for "
-                            f"owner {ctx.owner!r}")
+                if self._include_depth > P.MAX_INCLUDE_DEPTH:
+                    raise RuntimeError(
+                        f"include nesting exceeds {P.MAX_INCLUDE_DEPTH} levels")
+                text = self._fetch_include(stmt, ctx.env)
+                # runtime-resolved includes missed the pre-pass —
+                # enforce the policy on the spliced text now
+                self._authorize(text, "included script")
                 for sub in P.split_statements(text):
                     self._execute_statement(sub)
             finally:
@@ -539,32 +490,3 @@ class Engine:
         opts = {**stmt.options, "__path__": path}
         fn = alg.predict(ctx.spark, model, stmt.function, opts)
         ctx.udfs[stmt.function] = fn
-
-    # ------------------------------------------------------------------
-    def analyze(self, script: str) -> list[dict]:
-        """Pre-execution auth/lineage analysis: which tables each statement
-        reads/writes (reference pass D, ScriptSQLExec.scala:122-142 +
-        Protocal.scala:67-111)."""
-        out: list[dict] = []
-        for raw in self._expand_includes(P.split_statements(script),
-                                         best_effort=True):
-            kind = P.statement_kind(raw)
-            merged = P.template_merge(raw, self.context.env)
-            try:
-                stmt = P.parse_statement(merged)
-            except Exception:
-                # analysis must not crash on what execute() tolerates —
-                # truncated statements raise IndexError in token walkers
-                continue
-            if isinstance(stmt, P.LoadStmt):
-                out.append({"op": "load", "format": stmt.format,
-                            "path": stmt.path, "table": stmt.table})
-            elif isinstance(stmt, P.SelectStmt):
-                out.append({"op": "select", "table": stmt.table, "sql": stmt.sql})
-            elif isinstance(stmt, P.SaveStmt):
-                out.append({"op": "save", "format": stmt.format,
-                            "path": stmt.path, "table": stmt.table})
-            elif isinstance(stmt, P.TrainStmt):
-                out.append({"op": stmt.verb, "algorithm": stmt.algorithm,
-                            "table": stmt.table})
-        return out

@@ -104,6 +104,20 @@ DOCUMENTED_DROP_MACROS["ray"] = (
     "mapInPandas compute.")
 
 
+#: the !if family: interpreted by the engine, never expanded
+BRANCH_COMMANDS = frozenset({"if", "elif", "else", "then", "fi"})
+
+
+def check_command(name: str) -> None:
+    """Raise the error ``!name`` gets when it is neither a macro nor a
+    branch command: its documented-drop reason, else ``unknown
+    command``.  Execution and ``Engine.validate`` both call this."""
+    if name in MACROS or name in BRANCH_COMMANDS:
+        return
+    raise ValueError(DOCUMENTED_DROP_MACROS.get(
+        name, f"unknown command !{name}"))
+
+
 def _eval_default(expr: str, args: list[str]) -> str:
     """Evaluate a `{N:default}` default expression the way the
     reference's Templates2.evaluateDefaultValue does: `uuid()` → fresh

@@ -443,11 +443,9 @@ class SyntaxAnalyzeExt(ETAlgorithm):
     (reference: tech/mlsql/ets/SQLSyntaxAnalyzeExt)."""
 
     def train(self, df, path, params, context=None):
+        from streamingpro_spark.analyzer import tables_in_sql
         spark = df.sparkSession
-        sql = params["sql"]
-        plan = spark._jvm.org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parsePlan(sql)
-        import re as _re
-        tables = sorted(set(_re.findall(r"UnresolvedRelation \[([^\]]+)\]", plan.treeString())))
+        tables = tables_in_sql(params["sql"], spark)
         return local_table(spark, [(t,) for t in tables], "tableName: string")
 
 

@@ -272,42 +272,6 @@ class ChunkDocuments(ETAlgorithm):
                 ("overlap", "tokens shared between consecutive chunks", "0")]
 
 
-def dup_stats_col(arr: Column) -> Column:
-    """struct(dups, best) over an array: `dups` = number of instances
-    whose value occurs more than once in the array, `best` = max
-    multiplicity of any value.  ONE sort_array + one aggregate fold over
-    the sorted copy (runs of equal values) — O(L log L) per row, all
-    JVM, no explode, no shuffle."""
-    s = F.sort_array(arr)
-    init = F.struct(F.lit("\x00<init>").alias("prev"), F.lit(0).alias("run"),
-                    F.lit(0).alias("best"), F.lit(0).alias("singles"))
-
-    def step(acc, x):
-        same = x == acc["prev"]
-        new_run = F.when(same, acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"), new_run.alias("run"),
-            F.greatest(acc["best"], new_run).alias("best"),
-            (acc["singles"] + F.when((~same) & (acc["run"] == 1), 1)
-                               .otherwise(0)).alias("singles"))
-
-    def fin(acc):
-        singles = acc["singles"] + F.when(acc["run"] == 1, 1).otherwise(0)
-        return F.struct((F.size(arr) - singles).alias("dups"),
-                        acc["best"].alias("best"))
-
-    return F.aggregate(s, init, step, fin)
-
-
-def contiguous_ngrams_col(toks: Column, n: int) -> Column:
-    """ALL contiguous word n-grams (with repeats — unlike shingles_col's
-    array_distinct); empty array when the doc has fewer than n tokens."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    return F.when(F.size(toks) >= n,
-                  F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-                  ).otherwise(F.array_remove(F.array(F.lit("")), ""))
-
-
 @register_et("RepetitionScore")
 class RepetitionScore(ETAlgorithm):
     """Gopher-style repetition filter (Rae et al. 2021 §A1.1: repetition
@@ -319,18 +283,12 @@ class RepetitionScore(ETAlgorithm):
     - frac_dup_lines     instances of repeated lines / n_lines
     - keep               all fractions under the (configurable) caps
 
-    Two engines producing IDENTICAL output (fractions rounded to 4):
-
-    - ``engine="arrow"`` (default): Arrow-batched numpy kernel —
-      np.unique duplicate counts per row, vectorized np.char n-gram
-      assembly.  Map-only.  Measured 5× faster than the SQL fold at
-      sf0.1 (0.8s vs 4.4s, local[32]): Spark higher-order functions
-      (transform/aggregate) are interpreted, not codegen, so the
-      per-row fold costs ~5 ms/doc on 1k-token docs vs ~0.15 ms for
-      the numpy kernel (the SimHashDedup precedent).
-    - ``engine="sql"``: pure JVM array expressions (ONE sort_array +
-      ONE aggregate fold per metric, no explode) — zero Python for
-      environments that forbid Python workers; plan-gated.
+    Fractions are rounded to 4 places (HALF_UP).  One Arrow-batched
+    numpy kernel computes them: np.unique duplicate counts per row and
+    vectorized np.char n-gram assembly, map-only.  Not a JVM fold:
+    Spark higher-order functions are interpreted, not codegen, and a
+    sort_array + aggregate fold per metric ran 5x slower (sf0.1,
+    local[4]: 7.57 s vs 1.42 s).
 
     Reference precedent: FeatureExtractInPlace
     (SQLFeatureExtractInPlace.scala) extracts per-row text ratios."""
@@ -340,46 +298,14 @@ class RepetitionScore(ETAlgorithm):
         max_top = get_float(params, "maxTopWordFrac", 0.3)
         max_dup = get_float(params, "maxDupNgramFrac", 0.4)
         max_lines = get_float(params, "maxDupLineFrac", 0.3)
-        # per-row cost is real (~0.15-5 ms/doc depending on engine); a
-        # small-file scan arrives as ONE partition and would serialize
-        # the corpus on one core (measured 27s for 5k docs at sf0.1
-        # before the spread).  At 100 TB the scan already yields
-        # partitions >> cores and this is a no-op.
+        # per-row cost is real (~0.15 ms/doc); a small-file scan
+        # arrives as ONE partition and would serialize the corpus on one
+        # core (measured 27s for 5k docs at sf0.1 before the spread).
+        # At 100 TB the scan already yields partitions >> cores and this
+        # is a no-op.
         from streamingpro_spark.operators.base import ensure_parallelism
         df = ensure_parallelism(df)
-        if params.get("engine", "arrow") == "arrow":
-            return self._train_arrow(df, col, max_top, max_dup, max_lines)
-        toks = tokens_col(F.col(col))
-        lines = F.split(F.col(col), "\n")
-        w = dup_stats_col(toks)
-        g2 = dup_stats_col(contiguous_ngrams_col(toks, 2))
-        g3 = dup_stats_col(contiguous_ngrams_col(toks, 3))
-        ln = dup_stats_col(lines)
 
-        def frac(numer, denom):
-            return F.round(numer.cast("double")
-                           / F.greatest(denom, F.lit(1)), 4)
-
-        out = (df
-               .withColumn("__t", toks).withColumn("__l", lines)
-               .withColumn("top_word_frac", frac(w["best"], F.size(toks)))
-               .withColumn("frac_dup_2grams",
-                           frac(g2["dups"],
-                                F.greatest(F.size(F.col("__t")) - 1, F.lit(0))))
-               .withColumn("frac_dup_3grams",
-                           frac(g3["dups"],
-                                F.greatest(F.size(F.col("__t")) - 2, F.lit(0))))
-               .withColumn("frac_dup_lines",
-                           frac(ln["dups"], F.size(F.col("__l"))))
-               .drop("__t", "__l"))
-        keep = ((F.col("top_word_frac") <= max_top)
-                & (F.col("frac_dup_2grams") <= max_dup)
-                & (F.col("frac_dup_3grams") <= max_dup)
-                & (F.col("frac_dup_lines") <= max_lines))
-        return out.withColumn("keep", keep)
-
-    @staticmethod
-    def _train_arrow(df, col, max_top, max_dup, max_lines):
         def kernel(batches):
             import math as _math
             import re as _re
@@ -391,57 +317,42 @@ class RepetitionScore(ETAlgorithm):
                 # is banker's and differs on exact .5 (e.g. 0.15625)
                 return _math.floor(x * 10000 + 0.5) / 10000
 
+            def _dup_frac(values):
+                # instances of a repeated value / all instances (0 when
+                # there are none)
+                _, c = _np.unique(values, return_counts=True)
+                return _r4(float(c[c > 1].sum()) / max(len(values), 1))
+
+            def _fracs(text):
+                if text is None:
+                    # null text -> null metrics, like SQL's split(NULL)
+                    return None, None, None, None
+                # same semantics as Spark split(lower, '\\s+'):
+                # Java \\s is ASCII-only, so re.ASCII here keeps
+                # Unicode whitespace INSIDE tokens like Spark's split
+                # and the RE2 oracle do; leading/trailing whitespace
+                # yields empty tokens on both
+                toks = _np.array(_re.split(r"\s+", text.lower(),
+                                           flags=_re.ASCII), dtype=object)
+                _, c = _np.unique(toks, return_counts=True)
+                a = toks.astype(str)
+                g2 = _np.char.add(_np.char.add(a[:-1], " "), a[1:])
+                g3 = _np.char.add(_np.char.add(g2[:-1], " "), a[2:])
+                lines = _np.array(text.split("\n"), dtype=object)
+                return (_r4(float(c.max()) / len(toks)), _dup_frac(g2),
+                        _dup_frac(g3), _dup_frac(lines))
+
             for pdf in batches:
-                tw, f2, f3, fl = [], [], [], []
-                for text in pdf[col]:
-                    if text is None:
-                        # null text -> null metrics, matching the SQL
-                        # engine (split(NULL) propagates)
-                        tw.append(None)
-                        f2.append(None)
-                        f3.append(None)
-                        fl.append(None)
-                        continue
-                    # same semantics as Spark split(lower, '\\s+'):
-                    # Java \\s is ASCII-only, so re.ASCII here keeps
-                    # Unicode whitespace INSIDE tokens like the JVM
-                    # engine and the RE2 oracle do; leading/trailing
-                    # whitespace yields empty tokens on both
-                    toks = _np.array(_re.split(r"\s+", text.lower(),
-                                               flags=_re.ASCII),
-                                     dtype=object)
-                    n = len(toks)
-                    _, c = _np.unique(toks, return_counts=True)
-                    tw.append(_r4(float(c.max()) / max(n, 1)))
-                    if n >= 2:
-                        a = toks.astype(str)
-                        g2 = _np.char.add(_np.char.add(a[:-1], " "), a[1:])
-                        _, c2 = _np.unique(g2, return_counts=True)
-                        f2.append(_r4(float(c2[c2 > 1].sum())
-                                        / max(n - 1, 1)))
-                    else:
-                        f2.append(0.0)
-                    if n >= 3:
-                        g3 = _np.char.add(_np.char.add(g2[:-1], " "),
-                                          a[2:])
-                        _, c3 = _np.unique(g3, return_counts=True)
-                        f3.append(_r4(float(c3[c3 > 1].sum())
-                                        / max(n - 2, 1)))
-                    else:
-                        f3.append(0.0)
-                    lines = _np.array(text.split("\n"), dtype=object)
-                    _, cl = _np.unique(lines, return_counts=True)
-                    fl.append(_r4(float(cl[cl > 1].sum())
-                                    / max(len(lines), 1)))
+                rows = [_fracs(text) for text in pdf[col]]
                 pdf = pdf.copy()
-                pdf["top_word_frac"] = tw
-                pdf["frac_dup_2grams"] = f2
-                pdf["frac_dup_3grams"] = f3
-                pdf["frac_dup_lines"] = fl
+                for k, name in enumerate(("top_word_frac", "frac_dup_2grams",
+                                          "frac_dup_3grams",
+                                          "frac_dup_lines")):
+                    pdf[name] = [r[k] for r in rows]
                 pdf["keep"] = [None if a is None else
                                (a <= max_top and b <= max_dup
                                 and c <= max_dup and d <= max_lines)
-                               for a, b, c, d in zip(tw, f2, f3, fl)]
+                               for a, b, c, d in rows]
                 yield pdf
 
         extra = ("top_word_frac double, frac_dup_2grams double, "
@@ -453,8 +364,6 @@ class RepetitionScore(ETAlgorithm):
 
     def explain_params(self):
         return [("contentCol", "text column", "text"),
-                ("engine", "arrow (numpy kernel, 5x) | sql (zero Python)",
-                 "arrow"),
                 ("maxTopWordFrac", "cap on top-word token fraction", "0.3"),
                 ("maxDupNgramFrac", "cap on duplicated 2/3-gram fraction",
                  "0.4"),

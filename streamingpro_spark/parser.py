@@ -431,3 +431,67 @@ def parse_statement(stmt: str) -> Parsed:
         return IncludeStmt(format=fmt, path=path, options=opts)
 
     return RawSqlStmt(sql=stmt)
+
+
+# ---------------------------------------------------------------------------
+# static walk: the one statement walker behind validate, analyze and auth
+# ---------------------------------------------------------------------------
+
+#: include nesting limit, at runtime and in the static walk
+#: (reference ScriptSQLExec.scala:95-109)
+MAX_INCLUDE_DEPTH = 10
+
+
+@dataclass
+class Walked:
+    """One statement as the static walk reaches it."""
+    index: int                  # top-level statement number (the include's,
+                                # for statements spliced from an include)
+    raw: str                    # text before ${var} substitution
+    text: str                   # text after substitution
+    stmt: Parsed | None         # None when parsing failed
+    error: Exception | None = None
+
+
+def walk(script: str, env: dict[str, str], fetch_include=None):
+    """Yield every statement of ``script`` the way execution reaches it,
+    without running any (reference passes A-D over one walker,
+    ScriptSQLExec.scala:80-148).
+
+    ``${var}`` is merged against a running copy of ``env``, and each
+    ``set`` binds with execution's rule: overwrite, except
+    ``type=defaultParam``.  A parse failure is yielded, not raised.
+    Given ``fetch_include(stmt, env)``, includes are spliced in place,
+    at most ``MAX_INCLUDE_DEPTH`` deep; an include that cannot be
+    resolved before runtime (the fetcher raises OSError or ValueError)
+    is yielded unchanged.  ``!if`` branches are
+    not evaluated: every branch is yielded."""
+    env = dict(env)
+
+    def statements(text: str, depth: int, index: int | None):
+        for i, raw in enumerate(split_statements(text)):
+            top = i if index is None else index
+            merged = template_merge(raw, env)
+            try:
+                stmt = parse_statement(merged)
+            except Exception as e:
+                # short statements raise IndexError in the token walkers
+                yield Walked(top, raw, merged, None, e)
+                continue
+            if isinstance(stmt, SetStmt):
+                if stmt.options.get("type") == "defaultParam":
+                    env.setdefault(stmt.key, stmt.value)
+                else:
+                    env[stmt.key] = stmt.value
+            elif (isinstance(stmt, IncludeStmt) and fetch_include is not None
+                  and depth < MAX_INCLUDE_DEPTH):
+                try:
+                    body = fetch_include(stmt, env)
+                except (OSError, ValueError):
+                    pass
+                else:
+                    yield from statements(body, depth + 1, top)
+                    continue
+            yield Walked(top, raw, merged, stmt)
+
+    yield from statements(script, 0, None)

@@ -277,9 +277,7 @@ class MLSQLServer:
         sql = params.get("sql", "")
         owner = params.get("owner", "admin")
         if params.get("executeMode", "query") == "analyze":
-            from streamingpro_spark.analyzer import analyze
-            eng = self.sessions.engine_for(owner)
-            return analyze(sql, eng.spark).as_dict()
+            return self.sessions.engine_for(owner).analyze(sql).as_dict()
         if params.get("executeMode") == "validate":
             return self.sessions.engine_for(owner).validate(sql)
         timeout_ms = int(params.get("timeout", -1))

@@ -243,8 +243,9 @@ def test_analyze(engine, sf_dir):
     load parquet.`{sf_dir}/region.parquet` as region;
     select * from region as out;
     """)
-    assert plan[0]["op"] == "load"
-    assert plan[1]["op"] == "select"
+    assert [(t.table, t.operate_type) for t in plan.inputs] == \
+        [(f"{sf_dir}/region.parquet", "load"), ("region", "select")]
+    assert [t.table for t in plan.outputs] == ["region", "out"]
 
 
 def test_unknown_command_raises(engine):
@@ -890,12 +891,13 @@ def test_validate_uses_latest_set_value(engine):
 
 def test_analyze_tolerates_runtime_includes(engine):
     """analyze() must not crash on set-then-include scripts that execute
-    fine (the include variable exists only at runtime)."""
+    fine; the variable set earlier in the script resolves the include."""
     out = engine.analyze("""
     set body = '''select 1 as a;''';
     include script.`body`;
     """)
-    assert isinstance(out, list)
+    assert out.inputs == []
+    assert [(t.table, t.operate_type) for t in out.outputs] == [("a", "select")]
 
 
 def test_for_child_inherits_load_hooks(spark):

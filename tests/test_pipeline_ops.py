@@ -242,24 +242,6 @@ def test_repetition_short_doc_zero_ngram_fracs(engine):
     assert r["frac_dup_2grams"] == 0.0 and r["frac_dup_3grams"] == 0.0
 
 
-def test_repetition_score_jvm_only_plan(spark, sf_dir):
-    import __spark_entry__ as em
-    eng = em._engine(spark)
-    df = eng.execute(f"""
-    load parquet.`{sf_dir}/documents.parquet` as documents;
-    run documents as RepetitionScore.`` where engine="sql" as output;
-    """)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
-    # the only exchange allowed is the explicit round-robin spread of a
-    # small single-file scan (ensure_parallelism); the operator itself
-    # must not shuffle on any key
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 # ---------------------------------------------------------------------------
 # DataMixing
 # ---------------------------------------------------------------------------
@@ -358,21 +340,6 @@ def test_semdedup_cell_split_preserves_within_sub_pairs(engine, sf_dir):
     assert set(split) <= set(exact)
     for k, v in split.items():
         assert v == exact[k]
-
-
-def test_repetition_arrow_matches_sql_engine(engine, sf_dir):
-    """The default Arrow kernel and the zero-Python SQL fold produce
-    IDENTICAL fractions (incl. HALF_UP rounding on exact .5)."""
-    def run(eng_name):
-        df = engine.execute(f"""
-        load parquet.`{sf_dir}/documents.parquet` as documents;
-        run documents as RepetitionScore.`` where engine="{eng_name}"
-            as output;
-        """)
-        return {r["doc_id"]: (r["top_word_frac"], r["frac_dup_2grams"],
-                              r["frac_dup_3grams"], r["frac_dup_lines"],
-                              r["keep"]) for r in df.collect()}
-    assert run("arrow") == run("sql")
 
 
 def test_java_image_alias_resizes(engine, tmp_path, spark):

@@ -3,16 +3,11 @@ driver-side tables as LocalRelations, BloomFilterDedup probes its bitmap
 with broadcast joins, and no `createDataFrame` over Python rows is left
 in the engine outside `local_table`."""
 
-import ast
 import math
-import os
 
 import pytest
 
-from conftest import assert_no_python
-
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
-    __file__))), "streamingpro_spark")
+from conftest import assert_no_python, assert_used_only_in
 
 
 # ---------------------------------------------------------------------------
@@ -60,34 +55,9 @@ def test_no_create_dataframe_outside_local_table():
         ("operators/base.py", "local_table"):
             "the helper itself passes a pyarrow.Table",
     }
-    found = set()
-    for root, _, files in os.walk(PKG):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
-            with open(path, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read(), path)
-
-            def visit(node, scope):
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                     ast.ClassDef)):
-                    scope = scope + (node.name,)
-                if (isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == "createDataFrame"):
-                    found.add((rel, ".".join(scope), node.lineno))
-                for child in ast.iter_child_nodes(node):
-                    visit(child, scope)
-
-            visit(tree, ())
-    stray = sorted(f"{rel}:{line} ({scope})" for rel, scope, line in found
-                   if (rel, scope) not in allow)
-    assert not stray, ("createDataFrame over Python rows plans a PythonRDD; "
-                       f"use base.local_table: {stray}")
-    stale = set(allow) - {(rel, scope) for rel, scope, _ in found}
-    assert not stale, f"allowlist entries with no call left: {stale}"
+    assert_used_only_in("createDataFrame", allow,
+                        "createDataFrame over Python rows plans a "
+                        "PythonRDD; use base.local_table")
 
 
 # ---------------------------------------------------------------------------
