@@ -347,6 +347,10 @@ class Engine:
             return
 
         merged = P.template_merge(raw, ctx.env)
+        if "${" in raw:
+            # a variable bound at runtime (set type=sql/shell) reached
+            # the pre-pass unresolved — enforce the policy on its value
+            self._authorize(merged, "statement")
         stmt = P.parse_statement(merged)
 
         if isinstance(stmt, P.IncludeStmt):

@@ -460,7 +460,10 @@ def walk(script: str, env: dict[str, str], fetch_include=None):
 
     ``${var}`` is merged against a running copy of ``env``, and each
     ``set`` binds with execution's rule: overwrite, except
-    ``type=defaultParam``.  A parse failure is yielded, not raised.
+    ``type=defaultParam``.  A ``type=sql`` or ``type=shell`` ``set``
+    unbinds its variable instead: its value is a result only execution
+    knows, so a later ``${var}`` stays literal.  A parse failure is
+    yielded, not raised.
     Given ``fetch_include(stmt, env)``, includes are spliced in place,
     at most ``MAX_INCLUDE_DEPTH`` deep; an include that cannot be
     resolved before runtime (the fetcher raises OSError or ValueError)
@@ -479,7 +482,12 @@ def walk(script: str, env: dict[str, str], fetch_include=None):
                 yield Walked(top, raw, merged, None, e)
                 continue
             if isinstance(stmt, SetStmt):
-                if stmt.options.get("type") == "defaultParam":
+                typ = stmt.options.get("type")
+                if typ in ("sql", "shell"):
+                    # bound to a result only execution knows: the
+                    # variable stays unbound, like a runtime one
+                    env.pop(stmt.key, None)
+                elif typ == "defaultParam":
                     env.setdefault(stmt.key, stmt.value)
                 else:
                     env[stmt.key] = stmt.value

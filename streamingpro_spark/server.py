@@ -339,6 +339,8 @@ class MLSQLServer:
         return self
 
     def stop(self) -> None:
-        self.httpd.shutdown()
+        if self._thread.is_alive():
+            # shutdown() waits for a serve_forever loop to exit
+            self.httpd.shutdown()
         self.httpd.server_close()   # release the listener fd (re-bind)
         self.jobs.shutdown()

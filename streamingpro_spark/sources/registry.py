@@ -10,15 +10,21 @@ queryName): streaming/core/datasource/MLSQLBaseStreamSource.scala:19-89.
 
 from __future__ import annotations
 
+import hashlib
 import os
-from typing import TYPE_CHECKING, Callable
+import stat
+import time
+import weakref
+from typing import TYPE_CHECKING, Callable, NamedTuple
 
 from pyspark.sql import functions as F
 
 from streamingpro_spark.operators.base import local_table
+from streamingpro_spark.sources import fsio
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType
     from streamingpro_spark.context import ExecutionContext
     from streamingpro_spark.parser import SaveStmt
 
@@ -99,7 +105,105 @@ def _post_load(ctx: "ExecutionContext", df: "DataFrame",
     return df
 
 
-_NANOS_CACHE: dict[tuple[str, bool], list[str]] = {}
+#: per-SparkSession parquet schema memo: (paths, reader options) →
+#: _SchemaEntry.  Weak keys, so a stopped session's entries go with it.
+#: An entry is replaced whole and checked against a fresh listing on
+#: every use, so concurrent loads need no lock: a lost update is a miss.
+_SCHEMAS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+#: entries per session; a session past this starts its memo over
+_SCHEMAS_MAX = 1024
+#: a listing whose newest file is younger than this is not memoized: a
+#: same-size rewrite within one mtime tick (a kernel jiffy on ext4/xfs,
+#: 2 s on FAT) would keep the listing, so the entry could go stale
+_RACY_NS = 2_000_000_000
+
+
+class _SchemaEntry(NamedTuple):
+    listing: str
+    conf: str
+    nanos: list[str]
+    schema: "StructType"
+
+
+def _listing(paths: list[str]) -> str | None:
+    """Digest of every file under `paths`, each as (path relative to
+    its root, size, mtime_ns); None when the read is not memoizable:
+    a non-local scheme (a remote listing costs about what Spark's own
+    does), a glob, a missing path, or a file younger than _RACY_NS."""
+    h = hashlib.blake2b(digest_size=16)
+    start, newest = time.time_ns(), 0
+    try:
+        for p in paths:
+            if not fsio.is_local(p) or any(c in p for c in "*?[{"):
+                return None
+            root = os.path.abspath(fsio.local_path(p))
+            st = os.stat(root)
+            files = [("", st.st_size, st.st_mtime_ns)]
+            if stat.S_ISDIR(st.st_mode):
+                files = []
+                for d, _, names in os.walk(root, followlinks=True):
+                    for n in names:
+                        f = os.path.join(d, n)
+                        fst = os.stat(f)
+                        files.append((os.path.relpath(f, root),
+                                      fst.st_size, fst.st_mtime_ns))
+                files.sort()
+            h.update(repr((root, files)).encode())
+            newest = max([newest, *(m for _, _, m in files)])
+    except OSError:
+        return None
+    return h.hexdigest() if start - newest >= _RACY_NS else None
+
+
+def _conf_digest(spark) -> str:
+    """Digest of the session's explicitly set SQL conf (one py4j call):
+    any conf that can change an inferred schema is in it once set."""
+    text = spark._jsparkSession.conf().getAll().toString()
+    return hashlib.blake2b(text.encode(), digest_size=16).hexdigest()
+
+
+def read_parquet(spark, paths: list[str],
+                 options: dict[str, str]) -> "tuple[DataFrame, list[str]]":
+    """Every engine parquet read: (the batch read of `paths`, its
+    TIMESTAMP(NANOS) columns), those columns read as long — apply
+    `nanos_shim` to the read, or to a stream over the same files.
+
+    Spark infers a parquet schema with a job per read.  The schema, the
+    nanos columns, a digest of the file listing and of the session's
+    set SQL conf are kept per session under (paths, options); a read
+    whose listing and conf both match is given the stored schema and
+    runs no job.  Any other read infers, and replaces the entry when
+    its listing is memoizable (see `_listing`)."""
+    opts = _spark_opts(options)
+    key = (tuple(paths), tuple(sorted(opts.items())))
+    reader = spark.read.options(**opts)
+    memo = _SCHEMAS.setdefault(spark, {})
+    listing = _listing(paths)
+    if listing is not None:
+        entry = memo.get(key)
+        if entry is not None and entry.listing == listing \
+                and entry.conf == _conf_digest(spark):
+            return reader.schema(entry.schema).parquet(*paths), entry.nanos
+    nanos = _nanos_timestamp_cols(
+        paths, opts.get("mergeSchema", "").lower() == "true")
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    conf = _conf_digest(spark) if listing is not None else ""
+    df = reader.parquet(*paths)
+    if listing is not None:
+        if len(memo) >= _SCHEMAS_MAX:
+            memo.clear()
+        memo[key] = _SchemaEntry(listing, conf, nanos, df.schema)
+    return df, nanos
+
+
+def nanos_shim(df: "DataFrame", nanos: list[str]) -> "DataFrame":
+    """TIMESTAMP(NANOS) columns, read as long, back to timestamps."""
+    for c in nanos:
+        # integer div — float division would lose precision on
+        # 60-bit epoch-nanos values
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
 
 
 def _ns_int64_cols_of(pf_schema) -> set[str]:
@@ -118,73 +222,58 @@ def _ns_int64_cols_of(pf_schema) -> set[str]:
     return out
 
 
-def _nanos_timestamp_cols(path: str, merge_schema: bool = False) -> list[str]:
+def _nanos_timestamp_cols(paths: list[str],
+                          merge_schema: bool = False) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark rejects them
     (PARQUET_TYPE_ILLEGAL) while other engines read them fine; we read
-    them as long and convert (footer inspection via pyarrow, driver-side,
-    cached per (path, mergeSchema)).
+    them as long and convert (footer inspection via pyarrow,
+    driver-side, memoized by `read_parquet` alone).
 
     Scope mirrors what Spark itself will read: without mergeSchema,
     Spark takes the schema of a single file, so candidates come from
-    the dataset's first-fragment schema and are resolved against
-    footers until each is seen (early exit — one footer in the common
-    single-schema case).  With mergeSchema="true" Spark unions every
-    footer, so a nanos column may first appear in ANY file — every
-    footer is inspected (metadata-only reads, thread-pooled; the user
-    already accepted all-footer cost by asking for mergeSchema)."""
-    key = (path, merge_schema)
-    if key in _NANOS_CACHE:
-        return _NANOS_CACHE[key]
+    the first fragment's schema and are resolved against footers until
+    each is seen (early exit — one footer in the common single-schema
+    case).  With mergeSchema="true" Spark unions every footer, so a
+    nanos column may first appear in ANY file — every footer is
+    inspected (metadata-only reads, thread-pooled; the user already
+    accepted all-footer cost by asking for mergeSchema)."""
     try:
         import pyarrow.dataset as ds
         import pyarrow.parquet as pq
         import pyarrow.types as pat
-        dataset = ds.dataset(path, format="parquet")
-        files = list(dataset.files)
+        datasets = [ds.dataset(p, format="parquet") for p in paths]
+        files = [f for d in datasets for f in d.files]
         if merge_schema:
             from concurrent.futures import ThreadPoolExecutor
-            if files:
-                with ThreadPoolExecutor(min(32, len(files))) as ex:
-                    sets = list(ex.map(
-                        lambda f: _ns_int64_cols_of(
-                            pq.ParquetFile(f).metadata.schema), files))
-                cols = sorted(set().union(*sets))
-            else:
-                cols = []
-        else:
-            pending = {f.name for f in dataset.schema
-                       if pat.is_timestamp(f.type) and f.type.unit == "ns"}
-            resolved: set[str] = set()
-            for f in files:
-                if not pending:
-                    break
-                pfs = pq.ParquetFile(f).metadata.schema
-                ns64 = _ns_int64_cols_of(pfs)
-                for name in set(pfs.names) & pending:
-                    pending.discard(name)
-                    if name in ns64:
-                        resolved.add(name)
-            cols = sorted(resolved)
+            if not files:
+                return []
+            with ThreadPoolExecutor(min(32, len(files))) as ex:
+                sets = list(ex.map(
+                    lambda f: _ns_int64_cols_of(
+                        pq.ParquetFile(f).metadata.schema), files))
+            return sorted(set().union(*sets))
+        pending = {f.name for f in datasets[0].schema
+                   if pat.is_timestamp(f.type) and f.type.unit == "ns"}
+        resolved: set[str] = set()
+        for f in files:
+            if not pending:
+                break
+            pfs = pq.ParquetFile(f).metadata.schema
+            ns64 = _ns_int64_cols_of(pfs)
+            for name in set(pfs.names) & pending:
+                pending.discard(name)
+                if name in ns64:
+                    resolved.add(name)
+        return sorted(resolved)
     except Exception:
-        cols = []
-    _NANOS_CACHE[key] = cols
-    return cols
+        return []
 
 
 def _load_file(ctx: "ExecutionContext", fmt: str, path: str,
                options: dict[str, str]) -> "DataFrame":
     real = ctx.resource_real_path(path)
-    if fmt == "parquet" and not ctx.is_stream():
-        ns_cols = _nanos_timestamp_cols(
-            real, options.get("mergeSchema", "").lower() == "true")
-        if ns_cols:
-            ctx.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = ctx.spark.read.options(**_spark_opts(options)).parquet(real)
-            for c in ns_cols:
-                # integer div — float division would lose precision on
-                # 60-bit epoch-nanos values
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-            return df
+    if fmt == "parquet" and not ctx.is_stream() and "schema" not in options:
+        return nanos_shim(*read_parquet(ctx.spark, [real], options))
     if ctx.is_stream() and fmt in ("parquet", "json", "csv", "text", "orc"):
         reader = ctx.spark.readStream
         if "schema" in options:
@@ -226,24 +315,17 @@ def _parse_schema_opt(spec: str):
 @register_loader("streamParquet")
 def _load_stream_parquet(ctx, path, options):
     real = ctx.resource_real_path(path)
-    ns_cols = _nanos_timestamp_cols(
-        real, options.get("mergeSchema", "").lower() == "true")
-    if ns_cols:
-        ctx.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = ctx.spark.read.parquet(real).schema
+    peek, nanos = read_parquet(ctx.spark, [real], options)
     # forward reader options (e.g. maxFilesPerTrigger for multi-batch
     # replay, latestFirst) — engine-level keys are filtered out
-    reader = ctx.spark.readStream.schema(schema) \
+    reader = ctx.spark.readStream.schema(peek.schema) \
         .options(**_spark_opts(options))
     if os.path.isfile(real):
         # FileStreamSource requires a directory; select the single file
         # via pathGlobFilter on its parent
         reader = reader.option("pathGlobFilter", os.path.basename(real))
         real = os.path.dirname(real)
-    df = reader.parquet(real)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    return nanos_shim(reader.parquet(real), nanos)
 
 
 @register_loader("warc")
@@ -756,9 +838,6 @@ def save_sink(ctx: "ExecutionContext", stmt: "SaveStmt") -> None:
                       "es", "solr", "redis", "mongo")
     path = stmt.path if _non_fs else ctx.resource_real_path(stmt.path)
     options = stmt.options
-    # a rewrite changes the footer schema (cache keyed (path, merge))
-    _NANOS_CACHE.pop((path, False), None)
-    _NANOS_CACHE.pop((path, True), None)
     if "repartitionBy" in options:
         # column-keyed repartition (optionally with fileNum as the
         # partition count): co-locates each key's rows in one task, the

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from streamingpro_spark.operators.base import local_table
 from streamingpro_spark.sources import fsio
+from streamingpro_spark.sources.registry import nanos_shim, read_parquet
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -442,8 +443,9 @@ def load(ctx: "ExecutionContext", path: str,
         match = [c for c in commits if c.get("txnId") == txn
                  and c.get("batchId") == int(bid)]
         if match:
-            return spark.read.options(**reader_opts).parquet(
-                real.rstrip("/") + f"/v={match[-1]['version']}")
+            return nanos_shim(*read_parquet(
+                spark, [real.rstrip("/") + f"/v={match[-1]['version']}"],
+                reader_opts))
         # no commit under this key (the batch hasn't saved yet, or the
         # lake save itself crashed): an EMPTY slice of the lake schema,
         # so downstream derivations are no-ops, not errors.  The slice
@@ -460,8 +462,8 @@ def load(ctx: "ExecutionContext", path: str,
         # (reference MLSQLDelta.scala `__delta_version__` union)
         lo = int(options.get("startingVersion", "0"))
         hi = int(options.get("endingVersion", str(latest)))
-        dfs = [spark.read.options(**reader_opts)
-               .parquet(real.rstrip("/") + f"/v={v}")
+        dfs = [nanos_shim(*read_parquet(
+                   spark, [real.rstrip("/") + f"/v={v}"], reader_opts))
                .withColumn("__delta_version__", F.lit(v))
                for v in sorted(by_version) if lo <= v <= hi]
         if not dfs:
@@ -488,4 +490,4 @@ def load(ctx: "ExecutionContext", path: str,
             f"reclaimed commit dirs {sorted(d.rsplit('/', 1)[-1] for d in missing)} "
             f"— they were removed by vacuum; only versions since the "
             f"last surviving overwrite are time-travelable")
-    return spark.read.options(**reader_opts).parquet(*dirs)
+    return nanos_shim(*read_parquet(spark, dirs, reader_opts))

@@ -396,3 +396,14 @@ def test_async_job_reports_statement_progress(server, sf_dir):
     assert seen is not None
     assert seen["current"] == 1 and seen["total"] == 1
     assert "sleep" in seen["script"]
+
+
+def test_stop_without_start_returns(spark):
+    """`stop()` on a server that never served returns: there is no
+    serve_forever loop for `shutdown()` to wait for."""
+    from streamingpro_spark.server import MLSQLServer
+    srv = MLSQLServer(spark)
+    t = threading.Thread(target=srv.stop, daemon=True)
+    t.start()
+    t.join(5)
+    assert not t.is_alive()

@@ -145,3 +145,40 @@ def test_split_statements_only_in_runtime_loops():
                         "a static pass must reach statements through "
                         "parser.walk, not split_statements",
                         skip=("parser.py",))
+
+
+def test_walk_leaves_sql_and_shell_sets_unbound():
+    """A `set` of type sql or shell is bound by execution to a result
+    the walk cannot know: the variable stays unbound, even over a
+    session value of the same name."""
+    got = [w.text for w in P.walk("""
+    set p = "select 'a'" where type="sql";
+    set q = "echo b" where type="shell";
+    load parquet.`${p}/${q}` as t;
+    """, {"p": "session"})]
+    assert got[-1] == "load parquet.`${p}/${q}` as t"
+
+
+def test_table_auth_sees_sql_bound_path(spark, tmp_path):
+    """A path computed by `set ... where type="sql"` reaches the
+    `table_auth` hook as the path execution reads, not as the query
+    text, and a rejected path is never read."""
+    from streamingpro_spark import Engine
+    secret = tmp_path / "secret_x"
+    spark.range(1).write.parquet(str(secret))
+    seen = []
+
+    def deny_secret(owner, tables):
+        paths = [t["table"] for t in tables["inputs"]]
+        seen.extend(paths)
+        return not any("secret" in p for p in paths)
+
+    eng = Engine(spark, table_auth=deny_secret)
+    script = (f"set p = \"select concat('{tmp_path}/sec', 'ret_x')\" "
+              "where type=\"sql\"; "
+              "load parquet.`${p}` as sql_bound_t;")
+    assert eng.validate(script) == []
+    with pytest.raises(PermissionError):
+        eng.execute(script)
+    assert str(secret) in seen
+    assert not spark.catalog.tableExists("sql_bound_t")
