@@ -37,6 +37,7 @@ from __future__ import annotations
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from streamingpro_spark.operators.base import (ETAlgorithm, eager_materialize,
                                                 ensure_parallelism, get_bool,
@@ -952,8 +953,11 @@ class NearDedup(ETAlgorithm):
     All MinHashDedup knobs pass through (threshold / numHashes /
     numBands / shingleSize / maxBucketSize / hashImpl), as do
     DupClusters' (maxIter / checkpointEvery).  Scale = the sum of its
-    parts: the single-shuffle bucket pairing and the shallow label
-    propagation, both audited in SCALE.md."""
+    parts: the single-shuffle bucket pairing and the components step
+    (`component_labels`: on the driver up to DRIVER_MAX_EDGES verified
+    pairs, else the shallow label propagation), both audited in
+    SCALE.md.  The removal set comes straight from the component
+    labels; no corpus-sized (id, cluster_id, keep) table is built."""
 
     def train(self, df, path, params, context=None):
         id_col = params.get("idCol", "doc_id")
@@ -984,19 +988,17 @@ class NearDedup(ETAlgorithm):
         else:
             self_pairs = MinHashDedup().train(df, "", params, context)
         # near-dups within the input: connected components → min-id
-        # survivor; the refTable mode runs it over the self-tagged pairs
-        clustered = cluster_pairs(df, self_pairs, params, context)
-        # anti-join on the NON-survivors (optimization round 11): the
-        # survivor list is corpus-sized, but the docs actually removed
-        # are only the dup-cluster losers — a tiny set AQE broadcasts,
-        # so the corpus is never shuffled to apply the removal.
-        # keep=false ⇔ membership in the removal set for every non-null
-        # id; NULL-id rows are KEPT (a null key never matches an anti
-        # join) — the defined semantics since round 11.  (The pre-r11
-        # semi-join on survivors dropped NULL-id rows as a side effect
-        # of null-key matching, not by design.)  Pinned by
+        # survivor; the refTable mode runs it over the self-tagged pairs.
+        # The non-survivors are the pair-graph ids that are not their
+        # component's min — a set no larger than the pair graph, which
+        # AQE broadcasts into the anti-join below, so the corpus is
+        # never shuffled to apply the removal.  NULL-id rows are KEPT
+        # (a null key has no label and never matches an anti join) —
+        # the defined semantics since round 11, pinned by
         # test_near_dedup_null_id_rows_kept.
-        drop_ids = clustered.filter(~F.col("keep")).select(id_col)
+        labels, caches = component_labels(df, self_pairs, params, context)
+        drop_ids = (labels.filter(F.col("label") != F.col("id"))
+                    .select(F.col("id").alias(id_col)))
         if params.get("refTable"):
             # plus every input doc with a verified ref near-dup
             drop_ids = (pairs.filter(F.col("pair_src") == "ref")
@@ -1004,8 +1006,11 @@ class NearDedup(ETAlgorithm):
                         .unionByName(drop_ids).distinct())
         joined = df.join(drop_ids, [id_col], "left_anti")
         out = eager_materialize(joined, params, context)
-        if params.get("refTable") and out is not joined:
-            pairs.unpersist()
+        if out is not joined:
+            for cache in caches:
+                cache.unpersist()
+            if params.get("refTable"):
+                pairs.unpersist()
         return out
 
     def explain_params(self):
@@ -1130,26 +1135,176 @@ class SoftDedup(ETAlgorithm):
                                    "20")]
 
 
-def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
-                  context=None) -> "DataFrame":
-    """DupClusters over a pairs DataFrame: (idCol, cluster_id, keep)
-    for every df row.  The ET resolves `pairsTable`; NearDedup and
-    SoftDedup pass their verified pairs straight in."""
+#: the most pair-graph edges `component_labels` resolves on the driver
+#: (one bounded collect + union-find); a larger graph runs the Spark
+#: label-propagation loop.  The measured crossover and the driver
+#: memory this bound implies are in SCALE.md (DupClusters).
+DRIVER_MAX_EDGES = 100_000
+
+
+def _driver_key_kind(dt) -> str | None:
+    """The driver engine's key kind for an id type whose Python order
+    is Spark's order: "int" for integral types, "str" for
+    binary-collated strings (code-point order is UTF-8 byte order),
+    else None."""
+    if isinstance(dt, IntegralType):
+        return "int"
+    return "str" if dt == StringType() else None
+
+
+def component_labels(df: "DataFrame", pairs: "DataFrame", params,
+                     context=None) -> "tuple[DataFrame, list[DataFrame]]":
+    """Connected components of the pair graph over the ids of `df`:
+    `(labels, caches)`.  `labels` is (id, label) for every df id that
+    is a pair endpoint, label = the least df id of its component, both
+    typed as the id column.  `caches` are persisted DataFrames the
+    caller unpersists once it has materialized what it built on
+    `labels` (the script's end frees them otherwise).
+
+    An endpoint that is NULL or not a df id joins nothing, so two df
+    ids connected only through it stay apart.  A graph of at most
+    DRIVER_MAX_EDGES edges over integral or string ids is resolved on
+    the driver: one bounded collect of the edges, one semi-join of df
+    against the distinct endpoints, union-find.  A larger graph, or
+    another id type, runs min-label propagation on Spark.  Both raise
+    the same error when propagation would need more than maxIter
+    rounds (a component member more than maxIter hops from its min
+    id)."""
     id_col = params.get("idCol", "doc_id")
     a_col = params.get("pairACol", "doc_a")
     b_col = params.get("pairBCol", "doc_b")
     max_iter = get_int(params, "maxIter", 20)
-    spark = df.sparkSession
-    # persist + materialize the edge list ONCE: the pairs are often a
-    # lazy plan over MinHashDedup output (examples/04), and without
-    # this every iteration re-executes the whole upstream LSH
-    # candidate pipeline
+    ids = df.select(F.col(id_col).alias("id"))
+    ends = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    kinds = {_driver_key_kind(f.dataType)
+             for f in (*ends.schema.fields, *ids.schema.fields)}
+    if len(kinds) == 1 and None not in kinds:
+        # persist ONCE: the pairs are often a lazy plan over
+        # MinHashDedup output (examples/04); the size probe below and,
+        # above the bound, the Spark engine's edge cache read this
+        # cache instead of re-running the upstream LSH pipeline
+        ends = script_cache(ends, context, "dup_pairs")
+        edges = ends.limit(DRIVER_MAX_EDGES + 1).toArrow()
+        if edges.num_rows <= DRIVER_MAX_EDGES:
+            ends.unpersist()
+            rows = list(zip(*(c.to_pylist() for c in edges.columns)))
+            return _driver_labels(ids, rows, kinds.pop(), max_iter), []
+    return _spark_labels(ids, ends, params, context, max_iter)
+
+
+def _not_converged(max_iter: int, changed: int) -> ValueError:
+    # round-8: a component with diameter > maxIter would come out
+    # MISLABELED (split into several clusters, extra docs marked
+    # keep) — fail with the remedy instead of silently shipping wrong
+    # survivors into a dedup pipeline
+    state = (f"{changed} labels still changing" if changed >= 0
+             else "no rounds run")
+    return ValueError(
+        f"DupClusters: label propagation had not converged "
+        f"after maxIter={max_iter} rounds ({state}) — the "
+        f"pair graph has a component "
+        f"with diameter > {max_iter}, and stopping now would "
+        f"mislabel it (splitting one duplicate cluster into "
+        f"several survivors).  Raise maxIter (one join+groupBy "
+        f"per extra round), or pre-partition the pairs if the "
+        f"graph is genuinely that deep.")
+
+
+def _driver_labels(ids: "DataFrame", rows, kind: str,
+                   max_iter: int) -> "DataFrame":
+    """component_labels' driver engine over the collected edge rows."""
+    spark = ids.sparkSession
+    ends = {v for r in rows for v in r if v is not None}
+    in_df: set = set()
+    if ends:
+        probe = local_table(spark, [(v,) for v in ends],
+                            "id bigint" if kind == "int" else "id string")
+        in_df = set(ids.join(F.broadcast(probe), "id", "left_semi")
+                    .toArrow().column(0).to_pylist())
+    parent = {v: v for v in in_df}
+
+    def find(v):
+        root = v
+        while parent[root] != root:
+            root = parent[root]
+        while parent[v] != root:
+            parent[v], v = root, parent[v]
+        return root
+
+    edges = [(a, b) for a, b in rows if a in parent and b in parent]
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    label = {v: find(v) for v in parent}
+    # maxIter parity with the Spark loop: min-label propagation settles
+    # after ecc(min) rounds, the BFS depth of each component from its
+    # min id; only a component of more than maxIter + 1 nodes can be
+    # that deep, so the common case skips the BFS
+    rounds = max(max_iter, 0)
+    sizes: dict = {}
+    for root in label.values():
+        sizes[root] = sizes.get(root, 0) + 1
+    big = [root for root, n in sizes.items() if n - 1 > rounds]
+    if big:
+        adj: dict = {v: set() for v in parent}
+        for a, b in edges:
+            adj[a].add(b)
+            adj[b].add(a)
+        if any(_depth_from(adj, root) > rounds for root in big):
+            raise _not_converged(
+                max_iter, _changes_in_round(adj, max_iter)
+                if max_iter > 0 else -1)
+    id_type = ids.schema[0].dataType
+    return local_table(spark, list(label.items()),
+                       StructType([StructField("id", id_type),
+                                   StructField("label", id_type)]))
+
+
+def _depth_from(adj: dict, root) -> int:
+    """BFS depth of root's component, from root."""
+    seen, frontier, depth = {root}, [root], -1
+    while frontier:
+        depth += 1
+        nxt = []
+        for u in frontier:
+            for w in adj[u] - seen:
+                seen.add(w)
+                nxt.append(w)
+        frontier = nxt
+    return depth
+
+
+def _changes_in_round(adj: dict, rounds: int) -> int:
+    """How many labels synchronous min-label propagation changes in
+    round `rounds` — the count the Spark loop's error reports.  A
+    label can only change next to one that changed the round before,
+    so each round scans the last round's changes only."""
+    label = {v: v for v in adj}
+    changed = dict(label)
+    for _ in range(rounds):
+        nxt: dict = {}
+        for u in changed:
+            for w in adj[u]:
+                if label[u] < nxt.get(w, label[w]):
+                    nxt[w] = label[u]
+        label.update(nxt)
+        changed = nxt
+    return len(changed)
+
+
+def _spark_labels(ids: "DataFrame", ends: "DataFrame", params, context,
+                  max_iter: int) -> "tuple[DataFrame, list[DataFrame]]":
+    """component_labels' Spark engine: min-label propagation to the
+    fixpoint over the persisted (src, dst) pair rows."""
+    spark = ids.sparkSession
     edges = script_cache(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-             .union(pairs.select(F.col(b_col).alias("src"),
-                                 F.col(a_col).alias("dst"))),
+        ends.union(ends.select(F.col("dst").alias("src"),
+                               F.col("src").alias("dst"))),
         context, "dup_edges")
     edges.count()
+    ends.unpersist()
 
     def neighbor_min(lab):
         return (edges.join(lab.select(F.col("id").alias("dst"),
@@ -1163,16 +1318,15 @@ def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
     # made every round's join + convergence count CORPUS-sized
     # (at 100 TB: a full-corpus shuffle per round for a dup graph
     # that is typically <1% of the corpus).  Non-edge docs are
-    # singletons attached by one broadcast-ready left join at the
-    # end.  The df-semi-join keeps the old semantics exactly: an
-    # edge endpoint NOT present in df contributed no label before
-    # (its labels row never existed) and still contributes none —
+    # singletons the callers attach themselves.  The df-semi-join
+    # keeps the old semantics exactly: an edge endpoint NOT present
+    # in df contributed no label before (its labels row never
+    # existed) and still contributes none —
     # two df nodes connected only THROUGH an out-of-corpus id must
     # not merge.  distinct() collapses duplicate-id input rows so
     # the final join cannot fan out (the old per-row labels carried
     # identical values for duplicate ids anyway).
-    all_ids = df.select(F.col(id_col).alias("id"))
-    labels_cache = (all_ids.distinct()
+    labels_cache = (ids.distinct()
                     .join(edges.select(F.col("src").alias("id"))
                           .distinct(),
                           "id", "left_semi")
@@ -1245,28 +1399,29 @@ def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
         if still == 0:
             converged = True
     if not converged:
-        # round-8: a component with diameter > maxIter would come
-        # out MISLABELED (split into several clusters, extra docs
-        # marked keep) — fail with the remedy instead of silently
-        # shipping wrong survivors into a dedup pipeline
         labels_cache.unpersist()
         edges.unpersist()
-        state = (f"{changed} labels still changing" if changed >= 0
-                 else "no rounds run")
-        raise ValueError(
-            f"DupClusters: label propagation had not converged "
-            f"after maxIter={max_iter} rounds ({state}) — the "
-            f"pair graph has a component "
-            f"with diameter > {max_iter}, and stopping now would "
-            f"mislabel it (splitting one duplicate cluster into "
-            f"several survivors).  Raise maxIter (one join+groupBy "
-            f"per extra round), or pre-partition the pairs if the "
-            f"graph is genuinely that deep.")
+        raise _not_converged(max_iter, changed)
+    if context is not None:
+        # a caller that keeps its output lazy leaves the final label
+        # cache to the engine's end-of-script reaper
+        context.cached_tables[f"__et_dup_labels_{id(labels_cache)}"] = \
+            (labels_cache, "script")
+    return labels, [labels_cache, edges]
+
+
+def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
+                  context=None) -> "DataFrame":
+    """DupClusters over a pairs DataFrame: (idCol, cluster_id, keep)
+    for every df row.  The ET resolves `pairsTable`; SoftDedup passes
+    its verified pairs straight in."""
+    id_col = params.get("idCol", "doc_id")
+    labels, caches = component_labels(df, pairs, params, context)
     # singletons (no pair row) re-attach here: labels is distinct
     # on id and tiny (pair-graph nodes only), so AQE broadcasts it
     # and the corpus side is never shuffled; a missing label means
     # "own cluster"
-    out = (all_ids
+    out = (df.select(F.col(id_col).alias("id"))
            .join(labels.withColumnRenamed("label", "__lab"),
                  "id", "left")
            .select(F.col("id").alias(id_col),
@@ -1275,13 +1430,8 @@ def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
            .withColumn("keep", F.col(id_col) == F.col("cluster_id")))
     mat = eager_materialize(out, params, context)
     if mat is not out:
-        labels_cache.unpersist()
-        edges.unpersist()
-    elif context is not None:
-        # lazy path: hand the final label cache to the engine's
-        # end-of-script reaper
-        context.cached_tables[f"__et_dup_labels_{id(labels_cache)}"] = \
-            (labels_cache, "script")
+        for cache in caches:
+            cache.unpersist()
     return mat
 
 
@@ -1296,20 +1446,25 @@ class DupClusters(ETAlgorithm):
     → (doc_id, cluster_id, keep) with cluster_id = min id in the
     component and keep = (doc_id == cluster_id).
 
-    Algorithm: min-label propagation to fixpoint, over ONLY the nodes
-    that appear in the pair graph (optimization round 11) — a doc with
-    no pair row can never change its label, so the per-round join +
-    map-side-combinable groupBy is dup-graph-sized, not corpus-sized;
-    singletons re-attach through one broadcast-ready left join at the
-    end.  Rounds run two per ACTION (the convergence count is the
-    per-action fixed cost on shallow graphs; judging convergence on
-    the last round alone is sound because propagation is monotone).
-    The iteration count is the component diameter — near-dup clusters
-    are shallow (dup sets are cliques or short chains), so this
-    converges in a few rounds.  `maxIter` bounds pathological chains.
-    (Very-large-diameter graphs would want pointer-jumping /
-    alternating-star — documented tradeoff, out of scope for
-    dedup-shaped graphs.)
+    Algorithm (`component_labels`), over ONLY the ids that appear in
+    the pair graph; singletons re-attach through one broadcast-ready
+    left join at the end, so no step is corpus-sized.
+    - Up to DRIVER_MAX_EDGES pairs over integral or string ids (an
+      increment's dup graph): one bounded collect of the pairs, one
+      semi-join of the input against their distinct endpoints, then
+      union-find on the driver.  A few Spark jobs instead of two per
+      propagation round; SCALE.md records the measured crossover and
+      the driver memory the bound implies.
+    - Larger graphs, or other id types: min-label propagation to the
+      fixpoint on Spark (optimization round 11), rounds growing
+      2→2→4→8 per action; judging convergence on the last round alone
+      is sound because propagation is monotone.  The round count is
+      the component depth from its min id — near-dup clusters are
+      shallow (cliques or short chains).  (Very-large-diameter graphs
+      would want pointer-jumping / alternating-star — documented
+      tradeoff, out of scope for dedup-shaped graphs.)
+    Both engines raise the same rendered error when a component is
+    deeper than `maxIter` rounds, and give the same output.
     """
 
     def train(self, df, path, params, context=None):

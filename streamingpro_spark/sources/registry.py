@@ -116,6 +116,9 @@ _SCHEMAS_MAX = 1024
 #: same-size rewrite within one mtime tick (a kernel jiffy on ext4/xfs,
 #: 2 s on FAT) would keep the listing, so the entry could go stale
 _RACY_NS = 2_000_000_000
+#: reads TIMESTAMP(NANOS) parquet columns as long; set only while
+#: `read_parquet` infers a schema that has such columns
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 class _SchemaEntry(NamedTuple):
@@ -187,9 +190,22 @@ def read_parquet(spark, paths: list[str],
     nanos = _nanos_timestamp_cols(
         paths, opts.get("mergeSchema", "").lower() == "true")
     if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Spark rejects TIMESTAMP(NANOS) unless this conf is on; it is
+        # on only while inferring, so the caller's own reads keep their
+        # conf, and a read given the inferred schema needs no conf
+        prior = spark.conf.getAll.get(_NANOS_AS_LONG)
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        try:
+            schema = reader.parquet(*paths).schema
+        finally:
+            if prior is None:
+                spark.conf.unset(_NANOS_AS_LONG)
+            else:
+                spark.conf.set(_NANOS_AS_LONG, prior)
+        df = reader.schema(schema).parquet(*paths)
+    else:
+        df = reader.parquet(*paths)
     conf = _conf_digest(spark) if listing is not None else ""
-    df = reader.parquet(*paths)
     if listing is not None:
         if len(memo) >= _SCHEMAS_MAX:
             memo.clear()
@@ -271,9 +287,12 @@ def _nanos_timestamp_cols(paths: list[str],
 
 def _load_file(ctx: "ExecutionContext", fmt: str, path: str,
                options: dict[str, str]) -> "DataFrame":
+    if fmt == "parquet" and "schema" not in options:
+        if ctx.is_stream():
+            return _load_stream_parquet(ctx, path, options)
+        return nanos_shim(*read_parquet(
+            ctx.spark, [ctx.resource_real_path(path)], options))
     real = ctx.resource_real_path(path)
-    if fmt == "parquet" and not ctx.is_stream() and "schema" not in options:
-        return nanos_shim(*read_parquet(ctx.spark, [real], options))
     if ctx.is_stream() and fmt in ("parquet", "json", "csv", "text", "orc"):
         reader = ctx.spark.readStream
         if "schema" in options:

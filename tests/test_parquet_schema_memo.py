@@ -264,3 +264,59 @@ def test_nanos_detection_only_under_the_memo_key():
     assert_used_only_in(
         "_nanos_timestamp_cols", {("sources/registry.py", "read_parquet")},
         "nanos detection outside read_parquet escapes the memo's key")
+
+
+@pytest.mark.parametrize("prior", [None, "false", "true"])
+def test_nanos_read_keeps_the_session_conf(spark, engine, tmp_path, prior):
+    """`nanosAsLong` is on only while a TIMESTAMP(NANOS) schema is
+    inferred: after the load the session holds its prior value (unset
+    stays unset), a memo hit still runs no job, and the timestamps read
+    the same."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    f = str(tmp_path / "ns.parquet")
+    _write_ts(f, "ns")
+    _age(f, 3600)
+    load = f"load parquet.`{f}` as ts_t;"
+    read = "select k, unix_timestamp(ts) as s from ts_t as ts_out;"
+    want = [(0, 1700000000), (1, 1700000060)]
+    if prior is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prior)
+    try:
+        _, n_fresh = _jobs(spark, lambda: engine.execute(load))
+        assert spark.conf.getAll.get(key) == prior
+        assert _rows(engine.execute(read)) == want
+        _, n_hit = _jobs(spark, lambda: engine.execute(load))
+        assert n_fresh >= 1 and n_hit == 0
+        assert spark.conf.getAll.get(key) == prior
+        assert _rows(engine.execute(read)) == want
+    finally:
+        spark.conf.unset(key)
+
+
+def test_stream_load_parquet_reads_nanos(engine, tmp_path):
+    """`load parquet` under `set streamName` peeks its schema through
+    `read_parquet` and its nanos shim, so a directory of
+    TIMESTAMP(NANOS) files streams timestamps instead of failing the
+    peek with PARQUET_TYPE_ILLEGAL."""
+    d = tmp_path / "ns_dir"
+    d.mkdir()
+    _write_ts(str(d / "a.parquet"), "ns")
+    engine.execute(f"""
+    set streamName = "ns_stream";
+    load parquet.`{d}` as ns_src;
+    select k, unix_timestamp(ts) as s from ns_src as ns_out;
+    save append ns_out as memory.`` where checkpointLocation="{tmp_path}/ck"
+        and duration="0" and queryName="ns_stream";
+    """)
+    assert engine.spark.table("ns_src").schema["ts"].dataType \
+        .simpleString() == "timestamp"
+    q = engine.context.jobs["ns_stream"]
+    try:
+        q.processAllAvailable()
+        rows = engine.spark.sql("select * from ns_stream").collect()
+        assert sorted(tuple(r) for r in rows) == [(0, 1700000000),
+                                                  (1, 1700000060)]
+    finally:
+        q.stop()
