@@ -229,16 +229,18 @@ def _checkpoint_file_of(df: "DataFrame") -> str | None:
 
 
 def eager_materialize(df: "DataFrame", params: dict[str, str],
-                      context=None) -> "DataFrame":
+                      context=None, caches=()) -> "DataFrame":
     """Materialize a small ET output so corpus-sized upstream caches can
-    be unpersisted immediately (MLSQL `run` is an action).
+    be unpersisted immediately (MLSQL `run` is an action): when it
+    materializes, each of the caller's `caches` is unpersisted.
 
     Prefers a RELIABLE checkpoint when `setCheckpointDir` is configured —
     localCheckpoint stores partitions on executor-local storage, so under
     dynamic allocation or executor loss the truncated lineage is
     unrecoverable (Spark docs warn explicitly).  Falls back to
     localCheckpoint only when no checkpoint dir is set AND dynamic
-    allocation is off; otherwise keeps the lazy plan (safe).
+    allocation is off; otherwise keeps the lazy plan (safe), and the
+    caches stay (`would_eager_materialize` decides).
 
     Checkpoint-file lifecycle: Spark auto-deletes reliable checkpoint
     files only when ``spark.cleaner.referenceTracking.cleanCheckpoints``
@@ -247,32 +249,30 @@ def eager_materialize(df: "DataFrame", params: dict[str, str],
     the file is tracked in ``context.checkpoint_files`` and freed by
     ``Engine.close()`` on session teardown (they cannot be freed at
     script end — the materialized view outlives the script)."""
-    if params.get("eagerCache", "true").lower() == "false":
+    if not would_eager_materialize(df, params):
         return df
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
+    if df.sparkSession.sparkContext.getCheckpointDir():
         mat = df.checkpoint(eager=True)
-        if context is not None:
-            ck = _checkpoint_file_of(mat)
-            if ck:
-                context.checkpoint_files.append(ck)
-        return mat
-    dyn = sc.getConf().get("spark.dynamicAllocation.enabled", "false")
-    if dyn.lower() == "true":
-        return df
-    return df.localCheckpoint(eager=True)
+        ck = _checkpoint_file_of(mat) if context is not None else None
+        if ck:
+            context.checkpoint_files.append(ck)
+    else:
+        mat = df.localCheckpoint(eager=True)
+    for cache in caches:
+        cache.unpersist()
+    return mat
 
 
 def would_eager_materialize(df: "DataFrame",
                             params: dict[str, str]) -> bool:
     """True when ``eager_materialize(df', params)`` on this session
     MATERIALIZES (reliable checkpoint or localCheckpoint) rather than
-    returning the lazy plan — i.e. the same decision tree as
-    eager_materialize, evaluated without running it.  Lets a composer
-    that feeds an inner ET's output into several downstream actions
-    know whether that output is already a truncated, computed RDD (no
-    second cache barrier needed) or still lazy (a persist+count is
-    load-bearing to avoid re-running the inner pipeline per action)."""
+    returning the lazy plan — the one place that decision is made.
+    Lets a composer that feeds an inner ET's output into several
+    downstream actions know whether that output is already a truncated,
+    computed RDD (no second cache barrier needed) or still lazy (a
+    persist+count is load-bearing to avoid re-running the inner
+    pipeline per action)."""
     if params.get("eagerCache", "true").lower() == "false":
         return False
     sc = df.sparkSession.sparkContext

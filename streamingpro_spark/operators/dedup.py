@@ -42,7 +42,7 @@ from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from streamingpro_spark.operators.base import (ETAlgorithm, eager_materialize,
                                                 ensure_parallelism, get_bool,
                                                 get_float, get_int,
-                                                local_table,
+                                                local_table, pushdown_barrier,
                                                 refuse_scratch_collisions,
                                                 script_cache,
                                                 would_eager_materialize)
@@ -605,13 +605,17 @@ class MinHashDedup(ETAlgorithm):
         else:
             sh_b = shingle_side(ref_df if ref_df is not None else df)
             b_keys = ["doc_b"]
-        verified = (pairs
-                    .join(sh_a.select(F.col("__id").alias("doc_a"),
-                                      F.col("__sh").alias("__sha")), "doc_a")
-                    .join(sh_b.withColumnRenamed("__id", "doc_b")
-                              .withColumnRenamed("__sh", "__shb"), b_keys)
-                    .withColumn("__inter",
-                                F.size(F.array_intersect("__sha", "__shb")))
+        joined = (pairs
+                  .join(sh_a.select(F.col("__id").alias("doc_a"),
+                                    F.col("__sh").alias("__sha")), "doc_a")
+                  .join(sh_b.withColumnRenamed("__id", "doc_b")
+                            .withColumnRenamed("__sh", "__shb"), b_keys)
+                  .withColumn("__inter",
+                              F.size(F.array_intersect("__sha", "__shb"))))
+        # the barrier keeps the optimizer from inlining __inter into the
+        # jaccard filter and projection: one intersection per pair, not
+        # three
+        verified = (pushdown_barrier(joined, "minhash_verify")
                     .withColumn("jaccard",
                                 F.col("__inter") / (F.size("__sha") + F.size("__shb")
                                                     - F.col("__inter")))
@@ -797,10 +801,7 @@ class NgramJaccardDedup(ETAlgorithm):
                            / (F.col("__na") + F.col("__nb") - F.col("__inter")))
                .filter(F.col("jaccard") >= threshold)
                .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard")))
-        mat = eager_materialize(out, params, context)
-        if mat is not out:
-            posting.unpersist()
-        return mat
+        return eager_materialize(out, params, context, [posting])
 
     def explain_params(self):
         return [("idCol", "document id column", "doc_id"),
@@ -910,10 +911,7 @@ class EmbeddingDedup(ETAlgorithm):
                        pair_dot_udf()(F.col("__na"), F.col("__nb"))
                         .alias("cosine"))
                .filter(F.col("cosine") >= threshold))
-        mat = eager_materialize(out, params, context)
-        if mat is not out:
-            with_sig.unpersist()
-        return mat
+        return eager_materialize(out, params, context, [with_sig])
 
     def explain_params(self):
         return [("idCol", "vector id column", "vec_id"),
@@ -1005,13 +1003,9 @@ class NearDedup(ETAlgorithm):
                         .select(F.col("doc_a").alias(id_col)).distinct()
                         .unionByName(drop_ids).distinct())
         joined = df.join(drop_ids, [id_col], "left_anti")
-        out = eager_materialize(joined, params, context)
-        if out is not joined:
-            for cache in caches:
-                cache.unpersist()
-            if params.get("refTable"):
-                pairs.unpersist()
-        return out
+        if params.get("refTable"):
+            caches = [*caches, pairs]
+        return eager_materialize(joined, params, context, caches)
 
     def explain_params(self):
         own = [("idCol", "document id column", "doc_id"),
@@ -1428,11 +1422,7 @@ def cluster_pairs(df: "DataFrame", pairs: "DataFrame", params,
                    F.coalesce(F.col("__lab"), F.col("id"))
                     .alias("cluster_id"))
            .withColumn("keep", F.col(id_col) == F.col("cluster_id")))
-    mat = eager_materialize(out, params, context)
-    if mat is not out:
-        for cache in caches:
-            cache.unpersist()
-    return mat
+    return eager_materialize(out, params, context, caches)
 
 
 @register_et("DupClusters")

@@ -21,6 +21,7 @@ per-operator shuffle inventory.
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import TYPE_CHECKING
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
@@ -37,7 +38,61 @@ from streamingpro_spark.operators.dedup import (hash_impl,
 from streamingpro_spark.operators.registry import register_et
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame
+    from pyspark.sql import Column, DataFrame
+
+
+# ---------------------------------------------------------------------------
+# The blocked prefix walk (TokenBudgetSample, DeterministicShard,
+# SequencePack)
+# ---------------------------------------------------------------------------
+
+def prefix_scratch(bucket: bool) -> dict[str, str]:
+    """The columns `prefix_before` creates (name → why), for the
+    caller's `refuse_scratch_collisions` guard."""
+    names = ("__before", "__cin", "__s", "__ob", "__boff") if bucket \
+        else ("__before",)
+    return {c: "created by the prefix walk" for c in names}
+
+
+def prefix_before(df: "DataFrame", group: str, order: "list[Column]",
+                  weight: "Column | None" = None,
+                  bucket: str | None = None) -> "DataFrame":
+    """`df` plus `__before`: the running total of `weight` (None = 1
+    per row) over the rows before each row of its `group`, walked in
+    ([bucket,] order) order.
+
+    Without `bucket` this is one window per group.  With `bucket` (a
+    non-NULL column) no task sorts a whole group: each (group, bucket)
+    window keeps its own running total `__cin`, and a |groups| x
+    |buckets| offset table adds the totals of the earlier buckets.
+    The bucket totals are max(`__cin`) over the windowed stream (the
+    last value of a non-negative running total is its total), so the
+    aggregate shares the window's exchange: one corpus scan, one
+    shuffle.  The offset table is broadcast back, and the group is
+    matched null-safe, so a NULL group is one group."""
+    keys = [group] + ([bucket] if bucket else [])
+    w = (Window.partitionBy(*keys).orderBy(*order)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    step = F.lit(1) if weight is None else weight
+    running = (F.row_number() if weight is None else F.sum(weight)).over(w)
+    if not bucket:
+        return df.withColumn("__before", running - step)
+    walked = df.withColumn("__cin", running)
+    tot = (walked.groupBy(F.col(group).alias("__s"),
+                          F.col(bucket).alias("__ob"))
+           .agg(F.max("__cin").alias("__tot")))
+    earlier = (Window.partitionBy("__s").orderBy("__ob")
+               .rowsBetween(Window.unboundedPreceding, -1))
+    off = tot.select("__s", "__ob",
+                     F.coalesce(F.sum("__tot").over(earlier), F.lit(0))
+                      .alias("__boff"))
+    return (walked.join(F.broadcast(off),
+                        F.col(group).eqNullSafe(F.col("__s"))
+                        & (F.col(bucket) == F.col("__ob")), "left")
+            .withColumn("__before",
+                        F.coalesce(F.col("__boff"), F.lit(0))
+                        + F.col("__cin") - step)
+            .drop("__cin", "__s", "__ob", "__boff"))
 
 
 # ---------------------------------------------------------------------------
@@ -473,19 +528,15 @@ class SequencePack(ETAlgorithm):
             words_count_col(F.coalesce(F.col(col), F.lit("")))
              .alias("n_tokens"))
         if mode == "chunk":
-            w = (Window.partitionBy("bucket").orderBy("doc_id_")
-                 .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            cum = F.sum("n_tokens").over(w)
-            start = (cum - F.col("n_tokens")).alias("start_offset")
-            out = base.select(
+            before = F.col("__before")
+            return prefix_before(base, "bucket", [F.col("doc_id_")],
+                                 F.col("n_tokens")).select(
                 F.col("doc_id_").alias(id_col), "bucket", "n_tokens",
-                start,
-                F.floor((cum - F.col("n_tokens")) / budget).alias("seq_first"),
-                F.floor((cum - 1) / budget).alias("seq_last"))
-            return out
+                before.alias("start_offset"),
+                F.floor(before / budget).alias("seq_first"),
+                F.floor((before + F.col("n_tokens") - 1) / budget)
+                 .alias("seq_last"))
         if mode == "greedy":
-            import pandas as pd
-
             # rendered guard on the documented memory bound (round-9):
             # each bucket is materialized as ONE pandas frame on one
             # executor, so an undersized numBuckets used to surface as
@@ -669,10 +720,13 @@ class TokenBudgetSample(ETAlgorithm):
 
     Plan: documents are ordered per stratum by (hash bucket, hash, id)
     — deterministic, reproducible, engine-portable.  The running total
-    is a window cumsum WITHIN each (stratum, hash-bucket) partition
-    plus a broadcast per-bucket offset: a |strata| × numBuckets
-    aggregate is cumsum'd over bucket rank (tiny window) and joined
-    back, so no stratum ever sorts in a single task.
+    is the blocked prefix walk `prefix_before`: a window cumsum WITHIN
+    each (stratum, hash-bucket) partition plus a broadcast per-bucket
+    offset, so no stratum ever sorts in a single task.
+
+    Input columns named like its scratch columns (``__h``, ``__bk``,
+    ``__nt`` and the walk's ``prefix_scratch``) are a rendered error:
+    they would be overwritten.
 
     100 TB: the per-row shuffle partitions on (stratum, bucket) —
     bounded at corpus/|strata|/numBuckets rows each, sized by
@@ -707,6 +761,9 @@ class TokenBudgetSample(ETAlgorithm):
             raise ValueError(
                 f'TokenBudgetSample: mode must be "filter" or '
                 f'"annotate", got {mode!r}')
+        refuse_scratch_collisions(df, "TokenBudgetSample", {
+            "__h": "the order hash", "__bk": "the hash bucket",
+            "__nt": "the token count", **prefix_scratch(True)})
         df = ensure_parallelism(df)
         h = portable_hash64(F.col(id_col).cast("string"), "budget",
                             hash_impl(params))
@@ -723,42 +780,16 @@ class TokenBudgetSample(ETAlgorithm):
                   .withColumn("__bk", F.pmod(F.col("__h"),
                                              F.lit(num_buckets)))
                   .withColumn("__nt", n_tokens))
-        w = (Window.partitionBy(strata_col, "__bk")
-                   .orderBy("__h", id_col)
-                   .rowsBetween(Window.unboundedPreceding,
-                                Window.currentRow))
-        base = base.withColumn("__cin", F.sum("__nt").over(w))
-        # per-bucket totals as max(running sum) over the WINDOWED
-        # stream (optimization round 11): the old groupBy over the
-        # pre-window `base` re-projected before its own shuffle, so
-        # the md5 hash + token count ran in a SECOND full corpus scan
-        # (profiled: two ~11 CPU-sec map stages at sf0.1).  Taking
-        # max(__cin) — the last value of a non-negative running sum is
-        # its total — lets the aggregate share the window's exchange
-        # (ReusedExchange): one scan, one shuffle write.
-        tot = (base.groupBy(F.col(strata_col).alias("__s"),
-                            F.col("__bk").alias("__ob"))
-                   .agg(F.max("__cin").alias("__tot")))
-        wo = (Window.partitionBy("__s").orderBy("__ob")
-                    .rowsBetween(Window.unboundedPreceding, -1))
-        off = tot.select("__s", "__ob",
-                         F.coalesce(F.sum("__tot").over(wo), F.lit(0))
-                          .alias("__off"))
-        # eqNullSafe: NULL-stratum rows form one stratum in the window
-        # and the offset agg (both group NULLs together) — a plain ==
-        # would miss the join and enforce their budget per BUCKET
-        # (numBuckets x over-keep) instead of per stratum
-        joined = base.join(
-            F.broadcast(off),
-            F.col(strata_col).eqNullSafe(F.col("__s"))
-            & (F.col("__bk") == F.col("__ob")), "left")
-        tokens_before = (F.coalesce(F.col("__off"), F.lit(0))
-                         + F.col("__cin") - F.col("__nt"))
+        # a NULL stratum is one stratum: the walk matches groups
+        # null-safe, so its budget holds per stratum, not per bucket
+        joined = prefix_before(base, strata_col,
+                               [F.col("__h"), F.col(id_col)],
+                               F.col("__nt"), "__bk")
         gate = F.lit(default_budget).cast("long")
         for value, b in sorted(budgets.items()):
             gate = F.when(F.col(strata_col) == value,
                           F.lit(b).cast("long")).otherwise(gate)
-        keep = (gate < 0) | (tokens_before < gate)
+        keep = (gate < 0) | (F.col("__before") < gate)
         if mode == "annotate":
             # overwrite same-named input columns (a prior annotate ET
             # may have left its own `keep`) — appending would emit a
@@ -767,7 +798,7 @@ class TokenBudgetSample(ETAlgorithm):
                          if c not in ("n_tokens", "tokens_before", "keep")]
             walked = joined.select(*base_cols,
                                    F.col("__nt").alias("n_tokens"),
-                                   tokens_before.alias("tokens_before"),
+                                   F.col("__before").alias("tokens_before"),
                                    keep.alias("keep"))
             excluded = null_ids.select(
                 *base_cols, n_tokens.alias("n_tokens"),
@@ -1094,6 +1125,25 @@ class DataMixing(ETAlgorithm):
 # DeterministicShard
 # ---------------------------------------------------------------------------
 
+def _shard_hash(id_col: str, impl: str) -> "Column":
+    """The hash a document's shard is drawn from (NULL for a NULL id)."""
+    return portable_hash64(F.col(id_col).cast("string"), "shard", impl)
+
+
+def _shard_gate(h: "Column", num_shards: int) -> "Column":
+    """The shard of a document whose `_shard_hash` is `h`."""
+    return F.pmod(h, F.lit(num_shards)).cast("int")
+
+
+def layout_manifest(layout: "DataFrame") -> "DataFrame":
+    """A layout's append manifest: one (shard, next_pos, n_rows) row per
+    non-NULL shard (LayoutManifest; DeterministicShard's refTable)."""
+    return (layout.where(F.col("shard").isNotNull())
+            .groupBy("shard")
+            .agg((F.max("shard_pos") + 1).alias("next_pos"),
+                 F.count(F.lit(1)).alias("n_rows")))
+
+
 @register_et("DeterministicShard")
 class DeterministicShard(ETAlgorithm):
     """Final training-data layout: assign every document a stable shard
@@ -1122,7 +1172,8 @@ class DeterministicShard(ETAlgorithm):
 
     100 TB: ONE corpus shuffle keyed by (shard, layout bucket);
     within-shard position = rank within the (shard, bucket) window
-    plus a broadcast per-bucket offset (the TokenBudgetSample walk),
+    plus a broadcast per-bucket offset (`prefix_before`, the walk
+    TokenBudgetSample and SequencePack also use),
     so NO single task ever sorts a whole shard — parallelism is
     numShards x layoutBuckets regardless of shard size.  Within-shard
     order is (bucket, hash, id): still a deterministic unbiased
@@ -1181,13 +1232,13 @@ class DeterministicShard(ETAlgorithm):
 
     Column hygiene (round-11): the operator reserves the scratch names
     it will create for the chosen mode (always ``__sh``; ``__ho`` when
-    epochSeed is set; ``__qb``/``__r``/``__boff`` on the bucketed
-    curriculum path; ``__bv``/``__r``/``__boff`` on the hash-order
-    path; ``__off`` when refTable is set) and raises a rendered error
-    if an input column collides — the pre-round-11 behavior silently
-    overwrote and then dropped such a column.  A scratch name a given
-    run does NOT create (e.g. ``__ho`` without epochSeed) still passes
-    through untouched.
+    epochSeed is set; the walk bucket ``__qb`` on the bucketed
+    curriculum path and ``__bv`` on the hash-order path; the walk's
+    own ``prefix_scratch``; ``__off`` when refTable is set) and raises
+    a rendered error if an input column collides — the pre-round-11
+    behavior silently overwrote and then dropped such a column.  A
+    scratch name a given run does NOT create (e.g. ``__ho`` without
+    epochSeed) still passes through untouched.
     """
 
     def train(self, df, path, params, context=None):
@@ -1195,6 +1246,8 @@ class DeterministicShard(ETAlgorithm):
         num_shards = get_int(params, "numShards", 64)
         order_col = params.get("orderCol", "")
         ref_tbl = params.get("refTable", "")
+        epoch = params.get("epochSeed", "")
+        cmode = params.get("curriculumMode", "exact")
         if num_shards < 1:
             raise ValueError(
                 f"DeterministicShard: numShards must be >= 1, got "
@@ -1204,32 +1257,42 @@ class DeterministicShard(ETAlgorithm):
                 f"DeterministicShard: orderCol {order_col!r} not in "
                 f"input columns {df.columns}")
         impl = hash_impl(params)
-        h = portable_hash64(F.col(id_col).cast("string"), "shard", impl)
-        epoch = params.get("epochSeed", "")
-        cmode = params.get("curriculumMode", "exact")
         if order_col and cmode not in ("exact", "bucketed"):
             raise ValueError(
                 f"DeterministicShard: unknown curriculumMode "
                 f'{cmode!r}; use "exact" or "bucketed"')
-        # scratch-column collision guard (round-11, ADVICE): compute
-        # exactly the scratch names the CHOSEN mode will create and
-        # refuse input columns that collide — before this guard a
-        # seeded run silently overwrote a user `__ho` and dropped it.
+        # the walk's bucket: hash streams (__bv) on the hash-order path,
+        # orderCol range buckets (__qb) on the bucketed curriculum, none
+        # on the exact curriculum (one window per shard)
+        bucket = ("__bv" if not order_col else
+                  "__qb" if cmode == "bucketed" else None)
+        if bucket == "__qb":
+            dt = df.schema[order_col].dataType.simpleString()
+            if dt not in ("tinyint", "smallint", "int", "bigint",
+                          "float", "double") \
+                    and not dt.startswith("decimal"):
+                raise ValueError(
+                    f'DeterministicShard: curriculumMode="bucketed"'
+                    f" needs a numeric orderCol for quantile "
+                    f"bucketing; {order_col!r} is {dt} — use "
+                    f'curriculumMode="exact"')
+        if bucket:
+            n_bkts = get_int(params, "layoutBuckets", 32)
+            if n_bkts < 1:
+                raise ValueError(
+                    f"DeterministicShard: layoutBuckets must be >= 1, "
+                    f"got {n_bkts}")
+        # scratch-column collision guard (round-11, ADVICE): exactly
+        # the scratch names the CHOSEN mode creates — a user column of
+        # such a name used to be silently overwritten and dropped.
         # Names a run does NOT create keep passing through (the
         # round-10 unseeded-`__ho` regression test).
-        # one structure drives BOTH the guard set and the error text,
-        # so a future scratch column added here stays in sync (the
-        # per-mode prose listing used to be hand-maintained)
         scratch: dict[str, str] = {"__sh": "always created"}
         if epoch:
             scratch["__ho"] = "created by epochSeed"
-        if order_col:
-            if cmode == "bucketed":
-                for c in ("__qb", "__r", "__boff"):
-                    scratch[c] = 'created by curriculumMode="bucketed"'
-        else:
-            for c in ("__bv", "__r", "__boff"):
-                scratch[c] = "created by the hash-order path"
+        if bucket:
+            scratch[bucket] = "the layout bucket"
+        scratch.update(prefix_scratch(bucket is not None))
         if ref_tbl:
             scratch["__off"] = "created by refTable"
         refuse_scratch_collisions(df, "DeterministicShard", scratch)
@@ -1240,179 +1303,80 @@ class DeterministicShard(ETAlgorithm):
         in_cols = [c for c in df.columns if c not in ("shard",
                                                       "shard_pos")]
         base = (df.drop("shard", "shard_pos")
-                  .withColumn("__sh", h)
+                  .withColumn("__sh", _shard_hash(id_col, impl))
                   .withColumn("shard",
-                              F.pmod(F.col("__sh"), F.lit(num_shards))
-                               .cast("int")))
+                              _shard_gate(F.col("__sh"), num_shards)))
         # the within-shard order key: the shard-gate hash by default;
         # the seeded position hash under epochSeed (ONE draw decides
         # both the bucket and the order, so the permutation is fully
         # seed-determined)
+        pos_hash = portable_hash64(F.col(id_col).cast("string"), pos_tag,
+                                   impl)
         if epoch:
-            base = base.withColumn(
-                "__ho", portable_hash64(F.col(id_col).cast("string"),
-                                        pos_tag, impl))
-            order_hash = F.col("__ho")
-        else:
-            order_hash = F.col("__sh")
+            base = base.withColumn("__ho", pos_hash)
+            pos_hash = F.col("__ho")
+        order = [pos_hash if epoch else F.col("__sh"), F.col(id_col)]
         if order_col:
-            # a NULL id has no hash gate, so the layout convention
-            # (shard = shard_pos = NULL, visible pass-through) must be
-            # applied EXPLICITLY here: unlike the hash path — where the
-            # null join key propagates NULL all the way to shard_pos —
-            # row_number() would happily assign the NULL-shard window
-            # partition positions ordered only by orderCol (round-10
-            # advisor finding: nondeterministic on orderCol ties)
-            null_mask = F.col(id_col).isNull()
-            if cmode == "exact":
-                # curriculum needs a TOTAL order per shard → one window
-                # per shard (size numShards for this path)
-                w = Window.partitionBy("shard").orderBy(
-                    F.col(order_col).asc_nulls_last(), order_hash,
-                    F.col(id_col))
-                out = (base.withColumn(
-                           "shard_pos",
-                           F.when(null_mask,
-                                  F.lit(None).cast("long"))
-                            .otherwise((F.row_number().over(w) - 1)
-                                       .cast("long")))
-                       # drop only the scratch columns THIS run created
-                       # — an unseeded run never made __ho, and a user
-                       # column of that name must pass through
-                       .drop("__sh", *(["__ho"] if epoch else [])))
-            elif cmode == "bucketed":
-                # the scale path: range-bucket orderCol by value
-                # thresholds (approx quantiles → balance), rank within
-                # (shard, qbucket), add broadcast offsets of earlier
-                # buckets — numShards x layoutBuckets parallel windows
-                # instead of one per shard.  Bucket assignment is a
-                # MONOTONE function of the orderCol VALUE, so the
-                # composed order (qbucket, orderCol, hash, id) equals
-                # exact mode's (orderCol, hash, id) total order: the
-                # positions are IDENTICAL to exact mode for ANY
-                # boundary choice (pytest parity gate) — quantile
-                # approximation only affects bucket balance, never the
-                # layout, so the operator's byte-reproducibility
-                # promise survives approxQuantile's merge-order
-                # sensitivity.
-                dt = df.schema[order_col].dataType.simpleString()
-                if dt not in ("tinyint", "smallint", "int", "bigint",
-                              "float", "double", "decimal") \
-                        and not dt.startswith("decimal"):
-                    raise ValueError(
-                        f'DeterministicShard: curriculumMode="bucketed"'
-                        f" needs a numeric orderCol for quantile "
-                        f"bucketing; {order_col!r} is {dt} — use "
-                        f'curriculumMode="exact"')
-                n_bkts = get_int(params, "layoutBuckets", 32)
-                if n_bkts < 1:
-                    raise ValueError(
-                        f"DeterministicShard: layoutBuckets must be "
-                        f">= 1, got {n_bkts}")
-                probs = [i / n_bkts for i in range(1, n_bkts)]
-                bnds = sorted(set(
-                    df.where(F.col(order_col).isNotNull())
-                      .select(F.col(order_col).cast("double")
-                              .alias("__oc"))
-                      .stat.approxQuantile("__oc", probs, 0.001))) \
-                    if probs else []
-                barr = F.array(*[F.lit(float(b)) for b in bnds]) \
-                    if bnds else F.array().cast("array<double>")
-                oc = F.col(order_col).cast("double")
-                # NULLs sort last in exact mode; the top bucket holds
-                # both above-last-boundary values and NULLs — the
-                # within-bucket asc_nulls_last order keeps them last
-                qb = F.when(F.col(order_col).isNull(),
-                            F.lit(len(bnds))).otherwise(
-                    F.size(F.filter(barr, lambda b: b <= oc)))
-                base = base.withColumn("__qb", qb)
-                w = Window.partitionBy("shard", "__qb").orderBy(
-                    F.col(order_col).asc_nulls_last(), order_hash,
-                    F.col(id_col))
-                ranked = base.withColumn(
-                    "__r", (F.row_number().over(w) - 1).cast("long"))
-                counts = base.groupBy("shard", "__qb").agg(
-                    F.count(F.lit(1)).alias("__bc"))
-                offw = (Window.partitionBy("shard").orderBy("__qb")
-                        .rowsBetween(Window.unboundedPreceding, -1))
-                offsets = (counts
-                           .withColumn("__boff",
-                                       F.coalesce(
-                                           F.sum("__bc").over(offw),
-                                           F.lit(0)))
-                           .drop("__bc"))
-                out = (ranked.join(F.broadcast(offsets),
-                                   ["shard", "__qb"], "left")
-                       .withColumn("shard_pos",
-                                   F.when(null_mask,
-                                          F.lit(None).cast("long"))
-                                    .otherwise((F.col("__r")
-                                                + F.col("__boff"))
-                                               .cast("long")))
-                       .select(*in_cols, "shard", "shard_pos"))
-            else:
-                raise ValueError(
-                    f"DeterministicShard: unknown curriculumMode "
-                    f'{cmode!r}; use "exact" or "bucketed"')
-        else:
-            # parallel position walk (the TokenBudgetSample shape): a
-            # second hash buckets each shard into layoutBuckets
-            # streams; rank within (shard, bucket) + a broadcast
-            # offset of the earlier buckets = the within-shard
-            # position.  No task ever sorts a whole shard.
-            n_bkts = get_int(params, "layoutBuckets", 32)
-            if n_bkts < 1:
-                raise ValueError(
-                    f"DeterministicShard: layoutBuckets must be >= 1, "
-                    f"got {n_bkts}")
-            bv = F.pmod(F.col("__ho") if epoch
-                        else portable_hash64(
-                            F.col(id_col).cast("string"), pos_tag, impl),
-                        F.lit(n_bkts))
-            base = base.withColumn("__bv", bv)
-            w = Window.partitionBy("shard", "__bv").orderBy(
-                order_hash, F.col(id_col))
-            ranked = base.withColumn(
-                "__r", (F.row_number().over(w) - 1).cast("long"))
-            counts = base.groupBy("shard", "__bv").agg(
-                F.count(F.lit(1)).alias("__bc"))
-            offw = (Window.partitionBy("shard").orderBy("__bv")
-                    .rowsBetween(Window.unboundedPreceding, -1))
-            offsets = (counts
-                       .withColumn("__boff",
-                                   F.coalesce(F.sum("__bc").over(offw),
-                                              F.lit(0)))
-                       .drop("__bc"))
-            out = (ranked.join(F.broadcast(offsets), ["shard", "__bv"],
-                               "left")
-                   .withColumn("shard_pos",
-                               (F.col("__r") + F.col("__boff"))
-                                .cast("long"))
-                   .select(*in_cols, "shard", "shard_pos"))
+            order = [F.col(order_col).asc_nulls_last()] + order
+        if bucket == "__bv":
+            # the position hash splits each shard into layoutBuckets
+            # streams
+            base = base.withColumn("__bv", F.pmod(pos_hash, F.lit(n_bkts)))
+        if bucket == "__qb":
+            # range-bucket orderCol by value thresholds (approx
+            # quantiles → balance).  Bucket assignment is a MONOTONE
+            # function of the orderCol VALUE, so the composed order
+            # (qbucket, orderCol, hash, id) equals exact mode's
+            # (orderCol, hash, id) total order: the positions are
+            # IDENTICAL to exact mode for ANY boundary choice (pytest
+            # parity gate) — quantile approximation only affects bucket
+            # balance, never the layout, so the operator's
+            # byte-reproducibility promise survives approxQuantile's
+            # merge-order sensitivity.
+            probs = [i / n_bkts for i in range(1, n_bkts)]
+            bnds = sorted(set(
+                df.where(F.col(order_col).isNotNull())
+                  .select(F.col(order_col).cast("double").alias("__oc"))
+                  .stat.approxQuantile("__oc", probs, 0.001))) \
+                if probs else []
+            barr = F.array(*[F.lit(float(b)) for b in bnds]) \
+                if bnds else F.array().cast("array<double>")
+            oc = F.col(order_col).cast("double")
+            # NULLs sort last in exact mode; the top bucket holds both
+            # above-last-boundary values and NULLs — the within-bucket
+            # asc_nulls_last order keeps them last
+            base = base.withColumn("__qb", F.when(
+                F.col(order_col).isNull(), F.lit(len(bnds))).otherwise(
+                F.size(F.filter(barr, lambda b: b <= oc))))
+        # a NULL id has no hash gate: the layout convention (shard =
+        # shard_pos = NULL, visible pass-through) is applied explicitly,
+        # since the walk would give the NULL-shard group positions too
+        # (nondeterministic on orderCol ties)
+        out = prefix_before(base, "shard", order, bucket=bucket).select(
+            *in_cols, "shard",
+            F.when(F.col(id_col).isNull(), F.lit(None).cast("long"))
+             .otherwise(F.col("__before").cast("long")).alias("shard_pos"))
         if ref_tbl:
             prev = df.sparkSession.table(ref_tbl)
-            if "shard" in prev.columns and "next_pos" in prev.columns:
-                # manifest form — the O(|shards|) at-scale path: a
-                # per-shard (shard, next_pos) table maintained by the
-                # caller (examples/15's manifest aggregate), so a
-                # daily append never re-scans the full layout history
-                offsets = prev.select(
-                    "shard", F.col("next_pos").cast("long")
-                              .alias("__off"))
-            elif "shard" in prev.columns and "shard_pos" in prev.columns:
-                # full-layout form: aggregate the per-shard max — a
+            cols = set(prev.columns)
+            if "next_pos" not in cols and {"shard", "shard_pos"} <= cols:
+                # full-layout form: reduce it to its manifest — a
                 # column-pruned scan of two int columns over the
                 # history (fine for daily lakes; hand a manifest for
                 # truly huge layouts)
-                offsets = (prev.groupBy("shard")
-                           .agg((F.max("shard_pos") + 1).alias("__off")))
-            else:
+                prev = layout_manifest(prev)
+            elif not {"shard", "next_pos"} <= cols:
                 raise ValueError(
                     f"DeterministicShard: refTable {ref_tbl!r} is "
                     f"neither a layout (shard, shard_pos) nor a "
                     f"manifest (shard, next_pos) — it must be a prior "
                     f"DeterministicShard output, or its per-shard "
                     f"manifest, with the same numShards")
+            # manifest form — the O(|shards|) at-scale path: a per-shard
+            # (shard, next_pos) table (LayoutManifest's output), so a
+            # daily append never re-scans the full layout history
+            offsets = prev.select(
+                "shard", F.col("next_pos").cast("long").alias("__off"))
             # numShards-mismatch guard (round-10 advisor finding): a
             # reference built with a DIFFERENT numShards used to
             # coalesce silently to offset 0 for the missing shards and
@@ -1450,11 +1414,8 @@ class DeterministicShard(ETAlgorithm):
             # duplicates get their own error.  The full-layout form
             # can't dupe (it aggregates by shard) — only a
             # caller-maintained manifest can.
-            seen_shards: set[int] = set()
-            dup_set: set[int] = set()
-            for s, _ in typed:
-                (dup_set if s in seen_shards else seen_shards).add(s)
-            dup_shards = sorted(dup_set)
+            dup_shards = sorted(s for s, n in Counter(
+                s for s, _ in typed).items() if n > 1)
             if not bad and dup_shards:
                 raise ValueError(
                     f"DeterministicShard: refTable {ref_tbl!r} has "
@@ -1483,9 +1444,7 @@ class DeterministicShard(ETAlgorithm):
                    # the join key moves `shard` to the front — restore
                    # the no-ref column order (input cols, shard,
                    # shard_pos) so the two generations union cleanly
-                   .select(*[c for c in df.columns
-                             if c not in ("shard", "shard_pos")],
-                           "shard", "shard_pos"))
+                   .select(*in_cols, "shard", "shard_pos"))
         return out
 
     def explain_params(self):
@@ -1573,9 +1532,7 @@ class LayoutAudit(ETAlgorithm):
                 f"LayoutAudit: input is not a layout — missing "
                 f"column(s) {missing} (expect a DeterministicShard "
                 f"output with {id_col!r}, shard, shard_pos)")
-        gate = F.pmod(
-            portable_hash64(F.col(id_col).cast("string"), "shard", impl),
-            F.lit(num_shards)).cast("int")
+        gate = _shard_gate(_shard_hash(id_col, impl), num_shards)
         id_null = F.col(id_col).isNull()
         gate_bad = (~id_null & (F.col("shard").isNull()
                                 | (F.col("shard") != gate))).cast("int")
@@ -1647,10 +1604,7 @@ class LayoutManifest(ETAlgorithm):
                 f"LayoutManifest: input is not a layout — missing "
                 f"column(s) {missing} (expect a DeterministicShard "
                 f"output with shard, shard_pos)")
-        return (df.where(F.col("shard").isNotNull())
-                .groupBy("shard")
-                .agg((F.max("shard_pos") + 1).alias("next_pos"),
-                     F.count(F.lit(1)).alias("n_rows")))
+        return layout_manifest(df)
 
     def explain_params(self):
         return []

@@ -436,10 +436,7 @@ class LSHSimilaritySearch(ETAlgorithm):
         # materialize the (small) top-k output and drop the corpus-sized
         # signature cache immediately, instead of leaking it for the
         # session (eagerCache="false" keeps the lazy plan for .explain).
-        mat = eager_materialize(out, params, context)
-        if mat is not out:
-            with_sig.unpersist()
-        return mat
+        return eager_materialize(out, params, context, [with_sig])
 
     def explain_params(self):
         return [("idCol", "vector id column", "vec_id"),

@@ -70,6 +70,19 @@ def assert_used_only_in(name, allow, why, skip=()):
     package outside the `allow` scopes, each a (file, dotted enclosing
     def/class) pair, or when an allowed scope no longer uses it.  Files
     in `skip` are not scanned."""
+    assert_found_only_in(
+        lambda node: ((isinstance(node, ast.Attribute) and node.attr == name)
+                      or (isinstance(node, ast.Name) and node.id == name)
+                      or (isinstance(node, ast.alias)
+                          and node.name == name)),
+        allow, why, skip)
+
+
+def assert_found_only_in(match, allow, why, skip=()):
+    """Fail when an AST node for which `match(node)` holds appears in the
+    package outside the `allow` scopes, each a (file, dotted enclosing
+    def/class) pair, or when an allowed scope no longer holds one.
+    Files in `skip` are not scanned."""
     found = set()
     for root, _, files in os.walk(PKG):
         for fname in files:
@@ -84,10 +97,7 @@ def assert_used_only_in(name, allow, why, skip=()):
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                      ast.ClassDef)):
                     scope = scope + (node.name,)
-                if ((isinstance(node, ast.Attribute) and node.attr == name)
-                        or (isinstance(node, ast.Name) and node.id == name)
-                        or (isinstance(node, ast.alias)
-                            and node.name == name)):
+                if match(node):
                     found.add((rel, ".".join(scope), node.lineno))
                 for child in ast.iter_child_nodes(node):
                     visit(child, scope)

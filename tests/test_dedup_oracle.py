@@ -1,7 +1,8 @@
-"""DuckDB hash-match gate for the near-duplicate family at the Tier-1
-fixture scale: each query from `__spark_entry__.queries()` must return
-exactly the rows its `oracle_sql()` query computes in DuckDB, compared
-with the same normalization as `tools/check_correctness.py`."""
+"""DuckDB hash-match gate for the near-duplicate and training-layout
+families at the Tier-1 fixture scale: each query from
+`__spark_entry__.queries()` must return exactly the rows its
+`oracle_sql()` query computes in DuckDB, compared with the same
+normalization as `tools/check_correctness.py`."""
 
 import importlib.util
 import os
@@ -11,6 +12,10 @@ import pytest
 NEAR_DUP_QUERIES = ["minhash_dedup", "near_dedup", "near_dedup_incr",
                     "soft_dedup", "dup_clusters", "embedding_dedup",
                     "image_dedup_pairs", "image_phash_dedup"]
+LAYOUT_QUERIES = ["sequence_pack", "token_budget_sample",
+                  "deterministic_shard", "deterministic_shard_incr",
+                  "deterministic_shard_epoch", "layout_audit",
+                  "layout_manifest"]
 
 
 def _normalize():
@@ -34,7 +39,7 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", NEAR_DUP_QUERIES)
+@pytest.mark.parametrize("name", NEAR_DUP_QUERIES + LAYOUT_QUERIES)
 def test_near_dup_query_matches_duckdb_oracle(spark, sf_dir, duck, name):
     import __spark_entry__ as entry
     normalize = _normalize()

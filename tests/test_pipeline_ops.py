@@ -578,6 +578,48 @@ def test_token_budget_param_errors(engine):
         """)
 
 
+def test_token_budget_scratch_collision_guard(engine):
+    """An input column named like a scratch column the budget walk
+    creates is a rendered error; it used to come back silently
+    overwritten (`__h` holding the order hash, `__cin` running sums)."""
+    for col in ("__h", "__bk", "__nt", "__cin", "__before", "__boff"):
+        for mode in ("filter", "annotate"):
+            with pytest.raises(ValueError, match="collide"):
+                engine.execute(f"""
+                select id as doc_id, 'web' as source, 'a b c' as text,
+                       id * 7 as {col} from range(0, 10) as tbc;
+                run tbc as TokenBudgetSample.`` where defaultBudget="6"
+                    and mode="{mode}" as out;
+                """)
+    # a scratch-like name the walk does not create passes through
+    rows = engine.execute("""
+    select id as doc_id, 'web' as source, 'a b c' as text,
+           id * 7 as __r from range(0, 10) as tbp;
+    run tbp as TokenBudgetSample.`` where defaultBudget="6" as out;
+    """).collect()
+    assert rows and all(r["__r"] == r["doc_id"] * 7 for r in rows)
+
+
+def test_prefix_walk_only_in_helper():
+    """The exclusive prefix window (`rowsBetween(unboundedPreceding,
+    -1)`) — the bucket-offset step of the blocked prefix walk — is
+    written once, in `pipeline_ops.prefix_before`."""
+    import ast
+    from conftest import assert_found_only_in
+
+    def exclusive_prefix(node):
+        return (isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "rowsBetween"
+                and [ast.unparse(a) for a in node.args]
+                == ["Window.unboundedPreceding", "-1"])
+
+    assert_found_only_in(
+        exclusive_prefix,
+        {("operators/pipeline_ops.py", "prefix_before"):
+            "the blocked prefix walk"},
+        "a blocked prefix walk outside pipeline_ops.prefix_before")
+
+
 def test_token_budget_no_python_plan(spark, sf_dir):
     """Window cumsum + broadcast offset join: no Python eval anywhere,
     and the offset join side is broadcast (never sort-merge)."""

@@ -221,6 +221,20 @@ def test_bloom_dedup_broadcast_anti_join(engine, sf_dir):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_minhash_verify_single_intersect_plan(engine, sf_dir):
+    """MinHashDedup's verify step computes each pair's shingle
+    intersection once: without the barrier the optimizer inlined
+    `__inter` into the jaccard filter (twice) and the projection."""
+    df = engine.execute(f"""
+    load parquet.`{sf_dir}/documents.parquet` as mi_docs;
+    select doc_id, text from mi_docs where doc_id < 200 as mi_in;
+    run mi_in as MinHashDedup.`` where threshold="0.5"
+        and eagerCache="false" as mi_out;
+    """)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_intersect(") == 1, plan
+
+
 def test_deterministic_shard_parallel_walk_plan(spark, sf_dir):
     """Layout = hash-partition exchanges only (ONE corpus-sized, on
     (shard, bucket); the bucket-offset side aggregates to
